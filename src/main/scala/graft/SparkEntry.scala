@@ -871,8 +871,8 @@ object SparkEntry {
 
     // ---- S7 store round trip under the hash oracle: full partitioned
     //      write → incremental single-partition rewrite (earliest
-    //      month, prices ×1.1) → manifest-union read spanning two versions →
-    //      per-day aggregate. DuckDB reproduces the update as a CASE
+    //      month, prices ×1.1) → one-scan manifest read spanning two
+    //      versions → per-day aggregate. DuckDB reproduces the update as a CASE
     //      over the raw table, so the whole snapshot/manifest machinery
     //      is oracle-checked end to end ----
     "q_store_roundtrip" -> ((s, d) => {

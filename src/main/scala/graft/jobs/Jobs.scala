@@ -12,17 +12,20 @@ import graft.sources.JdbcSource
   * into the warehouse. One Spark write action, executor-parallel, no
   * driver detours. Returns false on an empty extract (the reference's
   * `df.rdd.isEmpty()` guard, POS_spark_dag.py:91).
+  *
+  * The guard probes `na.drop()` alone: dedup never empties a non-empty
+  * set, so the clean-load is empty exactly when no row survives the
+  * null drop — and that probe is a narrow scan, not the dedup shuffle
+  * the append then runs.
   */
 object DailyLoadJob {
   def run(
       extract: DataFrame,
       url: String,
       table: String,
-      props: Map[String, String] = Map.empty): Boolean = {
-    val cleaned = PosOps.cleanLoad(extract)
-    if (cleaned.isEmpty) false
-    else { JdbcSource.append(cleaned, url, table, props); true }
-  }
+      props: Map[String, String] = Map.empty): Boolean =
+    if (extract.na.drop().isEmpty) false
+    else { JdbcSource.append(PosOps.cleanLoad(extract), url, table, props); true }
 }
 
 /** EP2 — the hourly incremental sync (`POS_spark_dag.py:124–201`):

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-
-import graft.ops.PosOps
 
 /** Streaming ingest: the reference's 9-topic Kafka→CSV materialization
   * (EP3, `secondDataPipeline/kafka_consumer/kafka_consumer.py:379–409`)
@@ -160,9 +160,9 @@ object Ingest {
       .withColumn("_rn", monotonically_increasing_id()
         .bitwiseAND(lit((1L << 33) - 1)) + lit(1L))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // per-partition counts: #partitions rows — a scalar-sized collect
-    val counts = withRn.groupBy(col("_pid")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    // per-partition counts, read straight off the cached partitions
+    // (no second exchange); #partitions pairs — a scalar-sized collect
+    val counts = countRows(withRn.select(col("_pid")).as(Encoders.scalaInt))
     val offsets = (0 until parts).scanLeft(0L) {
       case (acc, pid) => acc + counts.getOrElse(pid, 0L)
     }
@@ -177,6 +177,20 @@ object Ingest {
       .drop("_pid", "_rn")
     (out, counts.values.sum, () => { withRn.unpersist(); () })
   }
+
+  /** Count each distinct row of `ds` map-side and merge the per-task
+    * maps on the driver: one narrow job, no exchange. Only for frames
+    * with few distinct rows (a batch census, per-partition counts,
+    * touched partition values), where a grouped aggregate would add a
+    * shuffle — and, under adaptive execution, a job of its own.
+    */
+  private def countRows[T](ds: Dataset[T]): Map[T, Long] =
+    ds.mapPartitions { rows =>
+      val n = mutable.Map.empty[T, Long]
+      rows.foreach(r => n(r) = n.getOrElse(r, 0L) + 1L)
+      n.iterator
+    }(Encoders.tuple(ds.encoder, Encoders.scalaLong))
+      .collect().toSeq.groupMapReduce(_._1)(_._2)(_ + _)
 
   /** Apply one micro-batch of entity events to the current table state.
     *
@@ -198,37 +212,54 @@ object Ingest {
     *    reference's producer-side duplicate gate makes this unreachable
     *    there).
     *
-    * One window pass over the batch partitioned by key + one key-level
-    * join against `current` — no driver work, scales with executors.
+    * ONE key-partitioned window over `current` ∪ `events` (one shuffle,
+    * no join, no driver work): every current row enters as an
+    * existence event ordered before every batch event, and a row
+    * survives iff it is effective (a current row, an add, or an edit
+    * of an existing key), is not a remove, and no later batch event of
+    * its key is effective. Later effects are read off the following
+    * frame: any later add/remove supersedes the row, and a later edit
+    * does so iff the key exists after the row (no existence event lies
+    * between them).
+    *
+    * `current` rows with a NULL key never meet a batch event: they sit
+    * in a window partition of their own (`_null_src` adds `_src` to
+    * the partition key for null keys only) and pass through unchanged,
+    * while null-key events replay among themselves against an absent
+    * key (null never equals a key). DUPLICATE keys in `current` share one fate: all survive
+    * when no batch event of their key is effective, and all give way
+    * to the key's final event otherwise.
     */
   def applyEvents(current: DataFrame, events: DataFrame, key: String): DataFrame = {
-    val dataCols = current.columns
-    val wSeq = Window.partitionBy(col(key)).orderBy(col("seq"), col("kind"))
-    val curKeys = current.select(col(key)).distinct()
-      .withColumn("_in_current", lit(true))
-    val annotated = events
+    val dataCols = current.columns.toIndexedSeq.map(col)
+    val isCur = col("_src") === 0
+    val isEdit = col("kind") === "edit"
+    // the partition key is plain columns and all window columns are
+    // computed in one select, so Catalyst builds ONE Window operator
+    // over ONE exchange
+    val w = Window.partitionBy(col(key), col("_null_src"))
+      .orderBy(col("_src"), col("seq"), col("kind"))
+    val later = w.rowsBetween(1, Window.unboundedFollowing)
+    current.select(dataCols :+ lit(0).as("_src"): _*)
+      .unionByName(events.select(
+        (col("kind") +: col("seq") +: dataCols) :+ lit(1).as("_src"): _*),
+        allowMissingColumns = true)
+      .withColumn("_null_src", when(col(key).isNull, col("_src")))
       // 1 = key exists after this event, 0 = gone; null for edits
-      .withColumn("_exist_change",
-        when(col("kind") === "remove", lit(0))
-          .when(col("kind") =!= "edit", lit(1)))
-      .withColumn("_prev_exist",
-        last(col("_exist_change"), ignoreNulls = true)
-          .over(wSeq.rowsBetween(Window.unboundedPreceding, -1)))
-      .join(curKeys, Seq(key), "left")
-      .withColumn("_exists_before",
-        coalesce(col("_prev_exist") === 1, col("_in_current"), lit(false)))
-    val effective = annotated
-      .filter(col("kind") =!= "edit" || col("_exists_before"))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col(key))
-          .orderBy(col("seq").desc, col("kind").desc)))
-      .filter(col("_rn") === 1)
-    val upserts = effective.filter(col("kind") =!= "remove")
-      .select(dataCols.map(col).toIndexedSeq: _*)
-    val removes = effective.filter(col("kind") === "remove")
-      .select(col(key))
-    PosOps.upsert(current, upserts, key)
-      .join(removes, Seq(key), "left_anti")
+      .withColumn("_exist",
+        when(isCur, lit(1)).when(col("kind") === "remove", lit(0))
+          .when(!isEdit, lit(1)))
+      .select(col("*"),
+        last(col("_exist"), ignoreNulls = true)
+          .over(w.rowsBetween(Window.unboundedPreceding, -1)).as("_prev"),
+        max(when(!isCur && !isEdit, lit(1))).over(later).as("_later_exist"),
+        max(when(!isCur && isEdit, lit(1))).over(later).as("_later_edit"))
+      .filter(col("_later_exist").isNull &&
+        (col("_later_edit").isNull ||
+          coalesce(col("_exist"), col("_prev"), lit(0)) =!= 1))
+      .filter(isCur || (col("kind") =!= "remove" &&
+        (!isEdit || coalesce(col("_prev") === 1, lit(false)))))
+      .select(dataCols: _*)
   }
 
   /** S5 — the real Kafka source: ONE stream subscribed to all 9 topics
@@ -320,46 +351,74 @@ object Ingest {
       .start()
   }
 
-  /** Partitions a micro-batch can change: values the events themselves
-    * carry (inserts/edits name their target partition) ∪ the *current*
-    * partition of every keyed event (an edit may move a row across
-    * partitions; a remove names only its key). The lookup is a
-    * semi-join over just (key, partCol) — two columns, parquet-pruned —
-    * and collects only the distinct partition values (batch-sized, not
-    * table-sized).
+  /** One entity's share of a micro-batch, from [[census]]: event
+    * counts by kind, and the partition values its non-remove events
+    * name (inserts/edits name their target partition; null stays in —
+    * it routes to the Hive default partition, a real directory).
     */
-  def touchedPartitions(
-      current: DataFrame, events: DataFrame,
-      key: String, partCol: String): Seq[String] = {
-    // null partition values stay in: they route to the Hive default
-    // partition, which is a real directory that must be rewritten too
-    val fromEvents = events
-      .filter(col("kind") =!= "remove")
-      .select(col(partCol).cast("string").as("p"))
-    // only edits/removes can touch a row's CURRENT partition; inserts
-    // carry fresh keys. Append-only batches (the ingest common case)
-    // therefore skip the snapshot key-lookup entirely — zero table
-    // reads — and keyed batches pay one (key, partCol) two-column
-    // pruned scan. (A key→partition secondary index would bound even
-    // that by |batch|; manifest-level future work.)
-    val keyed = events
-      .filter(col("kind").isin("edit", "remove") && col(key).isNotNull)
-      .select(col(key)).distinct()
-    val fromCurrent =
-      if (keyed.isEmpty) fromEvents.limit(0)
-      else current.join(keyed, Seq(key), "left_semi")
-        .select(col(partCol).cast("string").as("p"))
-    fromEvents.unionByName(fromCurrent).distinct()
-      .collect().map(_.getString(0)).toSeq
+  final case class EntityCensus(kinds: Map[String, Long], eventParts: Seq[String]) {
+    /** Only edits/removes can touch a row's CURRENT partition. */
+    def keyed: Boolean = kinds.contains("edit") || kinds.contains("remove")
   }
 
-  /** Apply one entity's events partition-scoped: read ONLY the touched
-    * partitions, replay events against that slice, rewrite ONLY those
-    * partitions (untouched partitions are carried forward by reference
-    * — their files are never opened). Ingest I/O is O(|batch|), not
-    * O(|table|) (VERDICT r2 "What's wrong #2"); consolidation runs
-    * when the snapshot's read fan-out exceeds [[maxLiveVersions]].
+  /** A sale's day partition, derived from its timestamp. */
+  private val saleDay = substring(col("sale_date"), 1, 10)
+
+  /** Entity name, topics, payload schema and the event-side partition
+    * value of each stored entity (customers are unpartitioned).
     */
+  private val entities = Seq(
+    ("sales", saleTopics, saleSchema, saleDay),
+    ("products", productTopics, productSchema, col(productPartCol)),
+    ("customers", customerTopics, customerSchema, lit(null)))
+
+  /** The batch's shape in ONE job over the (persisted) raw batch:
+    * (entity, kind, partition value) counts, aggregated map-side,
+    * parsed by [[parseEntity]] itself so the drop-all-null rule is
+    * the same.
+    *
+    * Everything the apply branches on — which entities are present,
+    * whether any insert needs an id, whether any event is keyed, which
+    * partitions the events name — is read off this one collect
+    * (entities × kinds × batch partition values rows).
+    */
+  def census(batch: DataFrame): Map[String, EntityCensus] = {
+    val counts = countRows(entities.map { case (entity, topics, schema, part) =>
+      parseEntity(batch, topics, schema).select(
+        lit(entity), col("kind"),
+        when(col("kind") =!= "remove", part).cast("string"))
+    }.reduce(_.union(_))
+      .as(Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING)))
+    counts.toSeq.groupBy(_._1._1).map { case (entity, rows) =>
+      entity -> EntityCensus(
+        rows.groupMapReduce(_._1._2)(_._2)(_ + _),
+        rows.collect { case ((_, kind, p), _) if kind != "remove" => p }.distinct)
+    }
+  }
+
+  /** Partitions a micro-batch can change: the values its events name
+    * (from the [[census]]) ∪ the *current* partition of every keyed
+    * event (an edit may move a row across partitions; a remove names
+    * only its key). Only a keyed census evaluates `current`: an
+    * append-only batch (the ingest common case) never plans or lists
+    * the snapshot. A keyed batch pays one semi-join over just
+    * (key, partCol) — two columns, parquet-pruned — and collects only
+    * the distinct partition values (batch-sized, not table-sized). (A
+    * key→partition secondary index would bound even that by |batch|;
+    * manifest-level future work.)
+    */
+  def touchedPartitions(
+      current: => DataFrame, events: DataFrame,
+      key: String, partCol: String, census: EntityCensus): Seq[String] = {
+    val fromCurrent =
+      if (!census.keyed) Nil
+      else countRows(current
+        .join(events.filter(col("kind").isin("edit", "remove") &&
+          col(key).isNotNull).select(col(key)), Seq(key), "left_semi")
+        .select(col(partCol).cast("string")).as(Encoders.STRING)).keys
+    (census.eventParts ++ fromCurrent).distinct
+  }
+
   /** Snapshot-meta key for the monotonic sale-id counter — maintained
     * by [[applyMicroBatch]] so id assignment never re-scans the id
     * column (the reference's `sale_id_tracker.txt`, kafka_consumer.py:
@@ -385,13 +444,20 @@ object Ingest {
       }
     }
 
+  /** Apply one entity's events partition-scoped: read ONLY the touched
+    * partitions, replay events against that slice, rewrite ONLY those
+    * partitions (untouched partitions are carried forward by reference
+    * — their files are never opened). Ingest I/O is O(|batch|), not
+    * O(|table|) (VERDICT r2 "What's wrong #2"); consolidation runs
+    * when the snapshot's read fan-out exceeds [[maxLiveVersions]].
+    */
   private def applyPartitioned(
       spark: SparkSession, store: TableStore, table: String,
       storeSchema: StructType, events: DataFrame,
-      key: String, partCol: String,
+      key: String, partCol: String, census: EntityCensus,
       meta: Map[String, String] = Map.empty): Unit = {
-    val full = store.read(spark, table, storeSchema)
-    val touched = touchedPartitions(full, events, key, partCol)
+    val touched = touchedPartitions(
+      store.read(spark, table, storeSchema), events, key, partCol, census)
     if (touched.nonEmpty) {
       val scoped = store.read(spark, table, storeSchema, Some(touched))
       val next = applyEvents(scoped, events, key)
@@ -401,18 +467,22 @@ object Ingest {
     }
   }
 
-  /** Batch application shared by the streaming query and tests. */
+  /** Batch application shared by the streaming query and tests: one
+    * [[census]] job decides every branch, then each present entity
+    * costs its id assignment (sales inserts only), its key lookup
+    * (keyed batches only) and one shuffle + write.
+    */
   def applyMicroBatch(spark: SparkSession, rawBatch: DataFrame, store: TableStore): Unit = {
     val batch = withSeq(rawBatch)
     batch.persist()
     try {
+      val shape = census(batch)
       // --- sales: assign ids to inserts, then upsert/remove,
       //     partition-scoped by day ---
-      val saleEvents = parseEntity(batch, saleTopics, saleSchema)
-      if (!saleEvents.isEmpty) {
+      shape.get("sales").foreach { c =>
+        val saleEvents = parseEntity(batch, saleTopics, saleSchema)
         migrateLegacy(spark, store, "sales", saleSchema, saleStoreSchema,
-          _.withColumn(saleDayCol, substring(col("sale_date"), 1, 10)),
-          saleDayCol)
+          _.withColumn(saleDayCol, saleDay), saleDayCol)
         // id counter from snapshot meta; the column scan (and even
         // planning the snapshot relation) is only the bootstrap
         // fallback for stores created before the counter
@@ -422,35 +492,39 @@ object Ingest {
               .agg(coalesce(max(col("sale_id")), lit(0L)))
               .head().getLong(0))
         // ids in arrival order (seq), the reference's consumption-order
-        // counter semantics (kafka_consumer.py:74–109)
-        val (inserts, nAssigned, release) = assignSaleIdsCounted(
-          saleEvents.filter(col("kind") === "sale").drop("sale_id"),
-          maxId, Seq("seq"))
-        try {
-          val events = inserts
-            .select((Seq("kind", "seq") ++ saleSchema.fieldNames).map(col): _*)
-            .unionByName(saleEvents.filter(col("kind") =!= "sale"))
-            .withColumn(saleDayCol, substring(col("sale_date"), 1, 10))
-          applyPartitioned(spark, store, "sales", saleStoreSchema,
-            events, "sale_id", saleDayCol,
-            meta = Map(maxSaleIdKey -> (maxId + nAssigned).toString))
-        } finally release()
+        // counter semantics (kafka_consumer.py:74–109); a batch without
+        // inserts skips the assignment's jobs entirely
+        val (events, nAssigned, release) =
+          if (!c.kinds.contains("sale")) (saleEvents, 0L, () => ())
+          else {
+            val (inserts, n, release) = assignSaleIdsCounted(
+              saleEvents.filter(col("kind") === "sale").drop("sale_id"),
+              maxId, Seq("seq"))
+            (inserts
+              .select((Seq("kind", "seq") ++ saleSchema.fieldNames).map(col): _*)
+              .unionByName(saleEvents.filter(col("kind") =!= "sale")),
+              n, release)
+          }
+        try applyPartitioned(spark, store, "sales", saleStoreSchema,
+          events.withColumn(saleDayCol, saleDay), "sale_id", saleDayCol, c,
+          meta = Map(maxSaleIdKey -> (maxId + nAssigned).toString))
+        finally release()
       }
 
       // --- products: partition-scoped by category ---
-      val prodEvents = parseEntity(batch, productTopics, productSchema)
-      if (!prodEvents.isEmpty) {
+      shape.get("products").foreach { c =>
         migrateLegacy(spark, store, "products", productSchema, productSchema,
           identity, productPartCol)
         applyPartitioned(spark, store, "products", productSchema,
-          prodEvents, "product_id", productPartCol)
+          parseEntity(batch, productTopics, productSchema),
+          "product_id", productPartCol, c)
       }
 
       // --- customers: single unpartitioned dimension ---
-      val custEvents = parseEntity(batch, customerTopics, customerSchema)
-      if (!custEvents.isEmpty) {
+      if (shape.contains("customers")) {
         val current = store.read(spark, "customers", customerSchema)
-        store.overwrite("customers", applyEvents(current, custEvents, "customer_id"))
+        store.overwrite("customers", applyEvents(current,
+          parseEntity(batch, customerTopics, customerSchema), "customer_id"))
       }
     } finally batch.unpersist()
   }

@@ -5,9 +5,15 @@ import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  InMemoryFileIndex, NoopCache, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Minimal versioned parquet table store: mutable-table semantics on
   * immutable files (SURVEY §7.4.2).
@@ -166,11 +172,9 @@ class TableStore(root: String, keepVersions: Int = 2) {
 
   /** Read the current snapshot; empty DataFrame with the given schema
     * if the table does not exist yet. For partitioned tables the
-    * snapshot is assembled from the manifest: one multi-path read per
-    * referenced version directory (partition values recovered from
-    * directory names against `basePath`), unioned. The result carries
-    * exactly `schema`'s columns — include the partition column in
-    * `schema` to materialize it.
+    * snapshot is ONE file relation assembled from the manifest (see
+    * [[readAt]]). The result carries exactly `schema`'s columns —
+    * include the partition column in `schema` to materialize it.
     *
     * `partValues`: optional path-level pruning — only the named
     * partition values are even *listed*, so a touched-partition read
@@ -193,6 +197,15 @@ class TableStore(root: String, keepVersions: Int = 2) {
     * snapshot while it stays inside the `keepVersions` retention
     * window). Fails fast if v has been retired or never existed,
     * never silently serves a different snapshot.
+    *
+    * A partitioned snapshot is ONE scan however many version
+    * directories it spans: a file index over exactly the manifest's
+    * (partition directory, version) entries, with each partition's
+    * value decoded from the manifest entry — never discovered from
+    * the path, so the `v=N` version directories can't pose as a
+    * partition column (a data column named `v` stays data). Catalyst
+    * plans every downstream join and aggregate once, not once per
+    * version branch, and partition filters still prune the index.
     */
   def readAt(
       spark: SparkSession,
@@ -216,15 +229,24 @@ class TableStore(root: String, keepVersions: Int = 2) {
             val live = m.entries.filter { case (d, _) => wanted.forall(_.contains(d)) }
             if (live.isEmpty) emptyDf(spark, schema)
             else {
-              val parts = live.groupBy(_._2).toSeq.map { case (ver, es) =>
-                val base = versionDir(name, ver).toString
-                spark.read
-                  .schema(schema)
-                  .option("basePath", base)
-                  .parquet(es.keys.toSeq.sorted.map(d => s"$base/$d"): _*)
-                  .select(schema.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
+              val partField = schema.find(_.name == m.partCol)
+                .getOrElse(StructField(m.partCol, StringType))
+              val partSchema = StructType(Seq(partField))
+              val hadoopConf = spark.sparkContext.hadoopConfiguration
+              val parts = live.toSeq.sorted.map { case (d, ver) =>
+                val dir = new HPath(versionDir(name, ver).resolve(d).toString)
+                val value = Cast(Literal(decodePartitionDir(d)), partField.dataType,
+                  Some(spark.conf.get("spark.sql.session.timeZone"))).eval()
+                PartitionPath(InternalRow(value),
+                  dir.getFileSystem(hadoopConf).makeQualified(dir))
               }
-              parts.reduce(_.unionByName(_))
+              val index = new InMemoryFileIndex(spark, parts.map(_.path),
+                Map.empty, Some(partSchema), NoopCache,
+                Some(PartitionSpec(partSchema, parts)))
+              val df = spark.baseRelationToDataFrame(HadoopFsRelation(index,
+                partSchema, StructType(schema.filterNot(_.name == m.partCol)),
+                None, new ParquetFileFormat, Map.empty)(spark))
+              df.select(schema.fieldNames.map(df.col).toIndexedSeq: _*)
             }
         }
     }

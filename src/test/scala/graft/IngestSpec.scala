@@ -687,6 +687,131 @@ class IngestSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  /** The Spark jobs `body` launches, recorded by a listener as their
+    * final stage's call site and operators: their number is a
+    * load-independent cost counter, unlike wall time.
+    */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sites.add(e.stageInfos.lastOption.fold("?") { st =>
+          st.rddInfos.flatMap(_.scope.map(_.name)).distinct
+            .mkString(s"${st.name} [", ",", "]")
+        })
+    }
+    org.apache.spark.GraftCoreShims.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.GraftCoreShims.drainListenerBus(spark.sparkContext)
+      sites.toArray(Array.empty[String]).toSeq
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("applyMicroBatch costs a small fixed number of Spark jobs: append, " +
+    "edit/remove over a 3-version snapshot, products+customers") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs")
+    val store = new TableStore(s"$dir/store")
+    def sales(day: String, from: Int) = (0 until 20).map { i =>
+      ("transactions_sale", sale(f"$day 10:00:$i%02d", from + i, 100 + i, 1, 2.0),
+        i.toLong)
+    }.toDF("topic", "value", "seq")
+    // one batch per day: the snapshot spans three version dirs
+    Seq("2025-04-01", "2025-04-02", "2025-04-03").zipWithIndex.foreach {
+      case (day, d) => Ingest.applyMicroBatch(spark, sales(day, 20 * d), store)
+    }
+    assert(store.liveVersionCount("sales") == 3)
+
+    val append = jobsOf(Ingest.applyMicroBatch(spark, sales("2025-04-04", 60), store))
+    // sale ids 1..80: edit one sale and remove another in each of the
+    // three older days, plus an edit of a key that never existed
+    def edit(id: Long, day: String) =
+      ("transactions_edit",
+        s"""{"sale_id":$id,"sale_date":"$day 11:00:00","customer_id":7,""" +
+          """"product_id":107,"quantity":9,"price":2.0,"total_price":18.0,""" +
+          """"payment_method":"Card"}""")
+    val waveEvents = Seq(
+      edit(1L, "2025-04-01"), ("transactions_remove", """{"sale_id":2}"""),
+      edit(21L, "2025-04-02"), ("transactions_remove", """{"sale_id":22}"""),
+      edit(41L, "2025-04-03"), ("transactions_remove", """{"sale_id":42}"""),
+      edit(999L, "2025-04-03"))
+    val wave = jobsOf(Ingest.applyMicroBatch(spark,
+      waveEvents.zipWithIndex.map { case ((t, v), i) => (t, v, i.toLong) }
+        .toDF("topic", "value", "seq"), store))
+    val dims = jobsOf(Ingest.applyMicroBatch(spark, Seq(
+      ("products_add",
+        """{"product_id":11,"product_name":"Milk","product_description":"d",""" +
+          """"product_category":"Daily","product_price":2.0,"stock_level":10}""", 0L),
+      ("customers_add",
+        """{"customer_id":7,"customer_name":"Ann","customer_location":"BKK"}""", 1L))
+      .toDF("topic", "value", "seq"), store))
+    info(s"jobs per batch: append ${append.size}, wave ${wave.size}, " +
+      s"products+customers ${dims.size}")
+
+    val got = store.read(spark, "sales", Ingest.saleStoreSchema)
+      .select("sale_id", "quantity").as[(Long, Int)].collect().toMap
+    assert(got.size == 77 && Seq(1L, 21L, 41L).forall(got(_) == 9) &&
+      !Seq(2L, 22L, 42L, 999L).exists(got.contains))
+    assert(store.read(spark, "products", Ingest.productSchema).count() == 1)
+    assert(store.read(spark, "customers", Ingest.customerSchema).count() == 1)
+    // census 1 + id assignment 4 (range sample, range shuffle, cache
+    // build, per-partition counts) + apply 2 (shuffle, write)
+    assert(append.size <= 8, s"append batch launched: $append")
+    // census 1 + key lookup 2 (broadcast keys, one narrow scan) +
+    // apply 2; no id assignment
+    assert(wave.size <= 6, s"edit/remove batch launched: $wave")
+    // census 1 + one apply (shuffle, write) per entity
+    assert(dims.size <= 6, s"products+customers batch launched: $dims")
+  }
+
+  test("TableStore partitioned snapshot over several versions reads as ONE " +
+    "scan: data column v, escaped, '&' and null partitions, pruning, time travel") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val dir = java.nio.file.Files.createTempDirectory("graft-onescan").toString
+    val store = new TableStore(dir, keepVersions = 5)
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("v", LongType), StructField("cat", StringType)))
+    type R = (Long, Long, String)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[R] =
+      df.as[(Long, Long, String)].collect().toSet
+    def frame(rs: (Long, Long, String)*) = rs.toDF("id", "v", "cat")
+    // v=1 writes four partitions; v=2, v=3, v=4 each rewrite one, so
+    // the snapshot spans all four version dirs
+    val v1 = Set[R]((1L, 100L, "Daily"), (2L, 200L, "Vegetable & Fruit"),
+      (3L, 300L, null), (4L, 400L, "a/b"))
+    store.overwrite("t", frame(v1.toSeq: _*), partitionBy = Seq("cat"))
+    store.overwritePartitions("t", frame((5L, 500L, "Daily")), "cat", Seq("Daily"))
+    val v2 = v1 - ((1L, 100L, "Daily")) + ((5L, 500L, "Daily"))
+    store.overwritePartitions("t",
+      frame((6L, 600L, "Vegetable & Fruit"), (7L, 700L, "Vegetable & Fruit")),
+      "cat", Seq("Vegetable & Fruit"))
+    val v3 = v2 - ((2L, 200L, "Vegetable & Fruit")) +
+      ((6L, 600L, "Vegetable & Fruit")) + ((7L, 700L, "Vegetable & Fruit"))
+    store.overwritePartitions("t", frame((8L, 800L, null)), "cat", Seq(null))
+    val v4 = v3 - ((3L, 300L, null)) + ((8L, 800L, null))
+    assert(store.liveVersionCount("t") == 4)
+
+    val full = store.read(spark, "t", schema)
+    assert(rows(full) == v4, "data column v must hold data, not a version")
+    assert(rows(store.read(spark, "t", schema,
+      Some(Seq("Vegetable & Fruit", null, "a/b")))) ==
+      v4.filter(r => r._3 != "Daily"))
+    assert(rows(full.filter(col("cat") === "a/b")) == Set((4L, 400L, "a/b")))
+    assert(rows(full.filter(col("cat").isNull)) == Set((8L, 800L, null)))
+    assert(rows(store.readAt(spark, "t", schema, 1L)) == v1)
+    assert(rows(store.readAt(spark, "t", schema, 2L)) == v2)
+    assert(rows(store.readAt(spark, "t", schema, 3L,
+      Some(Seq("Vegetable & Fruit")))) ==
+      v3.filter(_._3 == "Vegetable & Fruit"))
+    // the four version dirs are ONE file relation, not a union of four
+    val scans = full.queryExecution.executedPlan.collect {
+      case s: FileSourceScanExec => s
+    }
+    assert(scans.size == 1, s"one scan per snapshot:\n${full.queryExecution.executedPlan}")
+  }
+
   test("assignSaleIds stays flat at production partition counts (2000)") {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "2000")

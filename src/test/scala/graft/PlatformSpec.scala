@@ -81,4 +81,32 @@ class PlatformSpec extends SparkTestBase {
       (3L, 1, 3, 12.0),
       (4L, 3, 1, 9.0)))
   }
+
+  test("daily load of an all-null extract returns false and leaves the " +
+    "warehouse unchanged") {
+    val url = "jdbc:derby:memory:platform_nulls;create=true"
+    def rows(): Set[(Long, Int)] = {
+      val c = DriverManager.getConnection(url)
+      try {
+        val rs = c.createStatement().executeQuery(
+          "SELECT sale_id, quantity FROM sales")
+        val buf = scala.collection.mutable.Set[(Long, Int)]()
+        while (rs.next()) buf += ((rs.getLong(1), rs.getInt(2)))
+        buf.toSet
+      } finally c.close()
+    }
+    val c = DriverManager.getConnection(url)
+    try {
+      val st = c.createStatement()
+      st.execute("CREATE TABLE sales (sale_id BIGINT PRIMARY KEY, quantity INT)")
+      st.execute("INSERT INTO sales VALUES (1, 2)")
+      st.close()
+    } finally c.close()
+    // every row carries a null, so the clean-load drops them all
+    val extract = Seq[(Option[Long], Option[Int])](
+      (None, None), (Some(2L), None), (None, Some(3)))
+      .toDF("sale_id", "quantity")
+    assert(!DailyLoadJob.run(extract, url, "sales"))
+    assert(rows() == Set(1L -> 2))
+  }
 }

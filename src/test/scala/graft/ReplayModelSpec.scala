@@ -54,6 +54,63 @@ class ReplayModelSpec extends SparkTestBase {
     }
   }
 
+  /** The same consumer over a `current` table that may hold duplicate
+    * and NULL keys, as a row multiset: duplicates of a key stay until
+    * an effective event of that key collapses them, and null-key
+    * current rows never meet an event (null never equals a key), while
+    * null-key events replay among themselves against an absent key.
+    */
+  private def modelReplayRows(
+      current: Seq[(Option[Int], String)],
+      events: Seq[(String, Long, Option[Int], String)])
+      : Map[(Option[Int], String), Int] = {
+    val state = mutable.LinkedHashMap.empty[Option[Int], Seq[String]]
+    current.filter(_._1.isDefined).foreach { case (k, v) =>
+      state(k) = state.getOrElse(k, Nil) :+ v
+    }
+    events.sortBy(e => (e._2, e._1)).foreach {
+      case ("add", _, k, v)    => state(k) = Seq(v)
+      case ("edit", _, k, v)   => if (state.contains(k)) state(k) = Seq(v)
+      case ("remove", _, k, _) => state.remove(k)
+      case other => fail(s"unexpected event $other")
+    }
+    (current.filter(_._1.isEmpty) ++
+      state.toSeq.flatMap { case (k, vs) => vs.map(k -> _) })
+      .groupMapReduce(identity)(_ => 1)(_ + _)
+  }
+
+  test("applyEvents equals the sequential model when current keys are " +
+    "edited, removed and re-added, with duplicate and null keys") {
+    val rnd = new Random(20261017L)
+    val kinds = Seq("add", "edit", "remove")
+    (1 to 40).foreach { round =>
+      val keys = (1 to (2 + rnd.nextInt(5))).map(Option(_))
+      val current = keys.filter(_ => rnd.nextInt(3) > 0).flatMap { k =>
+        Seq.fill(if (rnd.nextInt(4) == 0) 2 else 1)(k -> s"cur${k.get}")
+      } ++ Seq.fill(rnd.nextInt(3))(Option.empty[Int] -> "curNull")
+      val curKeys = current.flatMap(_._1).distinct
+      // most events hit a key that starts in `current`, so keys are
+      // edited, removed and re-added; a few hit fresh or null keys
+      val events = (1 to (1 + rnd.nextInt(14))).map { i =>
+        val k = rnd.nextInt(10) match {
+          case 0 => None
+          case 1 | 2 => Some(keys.size + 1 + rnd.nextInt(2))
+          case _ if curKeys.nonEmpty => Some(curKeys(rnd.nextInt(curKeys.size)))
+          case _ => keys(rnd.nextInt(keys.size))
+        }
+        (kinds(rnd.nextInt(3)), i.toLong, k, s"v$round-$i")
+      }
+      val expected = modelReplayRows(current, events)
+      val got = Ingest.applyEvents(
+        current.toDF("id", "val"),
+        events.toDF("kind", "seq", "id", "val"),
+        "id").as[(Option[Int], String)].collect().toSeq
+        .groupMapReduce(identity)(_ => 1)(_ + _)
+      assert(got == expected,
+        s"round $round diverged\n events=$events\n current=$current")
+    }
+  }
+
   test("upsert invariants: key union, updates win, idempotent") {
     val rnd = new Random(7L)
     (1 to 10).foreach { _ =>
