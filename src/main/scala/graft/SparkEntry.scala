@@ -3019,8 +3019,10 @@ object SparkEntry {
     //      customer↔supplier trade graph: ranks as 10⁻⁹-scale longs,
     //      every step integer division — bit-identical on any layout
     //      and replayable by the oracle, which a float PageRank's FP
-    //      sum order could never promise. One rank⋈edges join + one
-    //      dst-keyed long sum per iteration, partitioning reused ----
+    //      sum order could never promise. Up to 100k edges the
+    //      iterations run on the driver (sf0.01 has 97k); above, one
+    //      rank⋈edges join + one dst-keyed long sum per iteration,
+    //      partitioning reused ----
     "q_pagerank" -> ((s, d) => {
       val li = t("lineitem")(s, d).select("l_orderkey", "l_suppkey")
       val o = t("orders")(s, d).select("o_orderkey", "o_custkey")

@@ -362,16 +362,13 @@ object Dedup {
     // than the corpus — and label propagation over a sub-million-edge
     // graph is microseconds of union-find against 10+ scheduled jobs
     // for the distributed loop (~4.6 s of pure overhead at sf0.1).
-    // ONE limited collect decides the path and feeds the fast one
-    // (transiently ~100 B/row as boxed Rows — order 100 MB at the 1M
-    // default, a deliberate driver budget; lower the bound on small
-    // drivers); only an overflow — a corpus-scale graph — re-evaluates
+    // ONE limited collect (graft.ops.DriverLocal) decides the path and
+    // feeds the fast one (order 100 MB of boxed Rows at the 1M
+    // default); only an overflow — a corpus-scale graph — re-evaluates
     // into the distributed loop below. driverMaxPairs=0 forces the
     // distributed path.
     // Integral id types only (a lossless long cast); any other id type
     // goes straight to the fully generic distributed loop.
-    require(driverMaxPairs < Int.MaxValue,
-      s"driverMaxPairs must fit a collectable limit, got $driverMaxPairs")
     // materialize the pair list ONCE before anything probes it: the
     // input is typically the full near-dup pipeline (synth + hash +
     // banded join), and the path-probe's limit+collect plus the
@@ -389,15 +386,14 @@ object Dedup {
              org.apache.spark.sql.types.LongType => true
         case _ => false
       })
-    if (integralIds && driverMaxPairs > 0) {
-      val probe = mat
-        .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-        .limit(driverMaxPairs.toInt + 1)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      if (probe.length <= driverMaxPairs) {
-        return driverClusters(probe, mat.schema("doc_a").dataType,
-          mat.sparkSession)
-      }
+    val probe =
+      if (!integralIds) None
+      else graft.ops.DriverLocal.collect(
+        mat.select(col("doc_a").cast("long"), col("doc_b").cast("long")),
+        driverMaxPairs)
+    if (probe.isDefined) {
+      return driverClusters(probe.get.map(r => (r.getLong(0), r.getLong(1))),
+        mat.schema("doc_a").dataType, mat.sparkSession)
     }
     val edges = mat.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(mat.select(col("doc_b").as("src"), col("doc_a").as("dst")))

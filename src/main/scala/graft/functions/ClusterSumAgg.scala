@@ -48,42 +48,7 @@ case class ClusterSumAgg(
   private val k = centroids.length
   private val dim = centroids.head.length
 
-  @transient private lazy val flat: Array[Double] = {
-    val a = new Array[Double](k * dim)
-    var i = 0
-    while (i < k) {
-      var j = 0
-      while (j < dim) { a(i * dim + j) = centroids(i)(j); j += 1 }
-      i += 1
-    }
-    a
-  }
-
-  // the −½|c|² bias of KMeans.clusterOf's augmented form (L2 argmin as
-  // dot-product argmax); added AFTER the coordinate fold, exactly where
-  // ArgTopCells' sequential dot over [v, 1]·[c, bias] lands it, so the
-  // accumulated double is bit-identical to the expression path
-  @transient private lazy val bias: Array[Double] =
-    centroids.map(c => -0.5 * c.map(x => x * x).sum).toArray
-
-  private def assignOf(a: ArrayData): Int = {
-    var best = -1
-    var bestD = Double.NegativeInfinity
-    var i = 0
-    while (i < k) {
-      var d = 0.0
-      var j = 0
-      val off = i * dim
-      while (j < dim) { d += a.getDouble(j) * flat(off + j); j += 1 }
-      d += bias(i)
-      // ties to the larger index, NaN above all — the ArgTopCells rule
-      if (best < 0 || java.lang.Double.compare(d, bestD) >= 0) {
-        best = i; bestD = d
-      }
-      i += 1
-    }
-    best
-  }
+  @transient private lazy val step = new ClusterSumAgg.Step(centroids)
 
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = false
@@ -99,8 +64,7 @@ case class ClusterSumAgg(
         s"cluster_sum_agg requires array<double>, got ${other.catalogString}")
     }
 
-  override def createAggregationBuffer(): ClusterSumAgg.State =
-    new ClusterSumAgg.State(new Array[Long](k), new Array[Long](k * dim))
+  override def createAggregationBuffer(): ClusterSumAgg.State = step.zero()
 
   override def update(
       buf: ClusterSumAgg.State, input: InternalRow): ClusterSumAgg.State = {
@@ -110,18 +74,7 @@ case class ClusterSumAgg(
         // wrong-dim rows are the caller's filter contract (train
         // filters size === dim before aggregating)
         if (a.numElements() != dim) buf
-        else {
-          val c = assignOf(a)
-          val off = c * dim
-          var j = 0
-          while (j < dim) {
-            buf.sums(off + j) = Math.addExact(
-              buf.sums(off + j), MomentSumAgg.unscaled12(a.getDouble(j)))
-            j += 1
-          }
-          buf.counts(c) += 1
-          buf
-        }
+        else step.add(buf, a, ClusterSumAgg.rounded(a))
     }
   }
 
@@ -171,4 +124,80 @@ case class ClusterSumAgg(
 
 object ClusterSumAgg {
   final class State(val counts: Array[Long], val sums: Array[Long])
+
+  /** A `dim`-vector's coordinates as 12-dp unscaled longs
+    * ([[MomentSumAgg.unscaled12]]). It does not depend on the
+    * centroids, so a caller iterating over the same vectors can round
+    * each one once.
+    */
+  def rounded(a: ArrayData): Array[Long] = {
+    val u = new Array[Long](a.numElements())
+    var j = 0
+    while (j < u.length) { u(j) = MomentSumAgg.unscaled12(a.getDouble(j)); j += 1 }
+    u
+  }
+
+  /** One Lloyd's pass's assign-and-accumulate step against fixed
+    * centroids: the aggregate's per-task `update` and
+    * [[graft.similarity.KMeans.train]]'s driver loop both run it, so
+    * the two paths cannot drift apart.
+    */
+  final class Step(centroids: Vector[Vector[Double]]) {
+    private val k = centroids.length
+    private val dim = centroids.head.length
+
+    private val flat: Array[Double] = {
+      val a = new Array[Double](k * dim)
+      var i = 0
+      while (i < k) {
+        var j = 0
+        while (j < dim) { a(i * dim + j) = centroids(i)(j); j += 1 }
+        i += 1
+      }
+      a
+    }
+
+    // the −½|c|² bias of KMeans.clusterOf's augmented form (L2 argmin
+    // as dot-product argmax); added AFTER the coordinate fold, exactly
+    // where ArgTopCells' sequential dot over [v, 1]·[c, bias] lands it,
+    // so the accumulated double is bit-identical to the expression path
+    private val bias: Array[Double] =
+      centroids.map(c => -0.5 * c.map(x => x * x).sum).toArray
+
+    def zero(): State = new State(new Array[Long](k), new Array[Long](k * dim))
+
+    private def assignOf(a: ArrayData): Int = {
+      var best = -1
+      var bestD = Double.NegativeInfinity
+      var i = 0
+      while (i < k) {
+        var d = 0.0
+        var j = 0
+        val off = i * dim
+        while (j < dim) { d += a.getDouble(j) * flat(off + j); j += 1 }
+        d += bias(i)
+        // ties to the larger index, NaN above all — the ArgTopCells rule
+        if (best < 0 || java.lang.Double.compare(d, bestD) >= 0) {
+          best = i; bestD = d
+        }
+        i += 1
+      }
+      best
+    }
+
+    /** Adds the `dim`-vector `a`, with `u` = [[rounded]]`(a)`, to its
+      * nearest centroid's cell.
+      */
+    def add(buf: State, a: ArrayData, u: Array[Long]): State = {
+      val c = assignOf(a)
+      val off = c * dim
+      var j = 0
+      while (j < dim) {
+        buf.sums(off + j) = Math.addExact(buf.sums(off + j), u(j))
+        j += 1
+      }
+      buf.counts(c) += 1
+      buf
+    }
+  }
 }

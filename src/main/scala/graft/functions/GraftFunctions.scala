@@ -846,6 +846,94 @@ object ArgTopCells {
   }
 }
 
+/** The IVF-PQ asymmetric-distance lookup table of a query vector
+  * (Jégou et al., TPAMI 2011): for each of the `m` subspaces, the dots
+  * of the query's `dsub`-slice with every codebook entry, as
+  * `array<array<double>>` (m × entries). ONE native expression in
+  * place of the composed form, m·ksub `VectorDot(slice(v, s·dsub + 1,
+  * dsub), array(<literals>))` trees whose generated code outgrew the
+  * 64 KB method limit and dropped the whole stage to interpreted
+  * execution. Each cell is the same sequential fold over the same
+  * slice bounds as that form, so the doubles are bit-equal: a vector
+  * shorter than `m·dsub` folds over what its slice holds (an empty
+  * slice gives 0.0), a longer one is cut at `dsub` per subspace.
+  *
+  * Codebooks ride along as a plan-reference object (the
+  * [[ArgTopCells]] precedent), flattened row-major.
+  */
+case class PqLookupTable(
+    child: Expression,
+    codebooks: Vector[Vector[Vector[Double]]],
+    dsub: Int) extends UnaryExpression {
+  require(dsub > 0, "dsub must be positive")
+  require(codebooks.forall(_.forall(_.length == dsub)),
+    s"every codebook entry must have $dsub dims")
+
+  override def dataType: DataType = ArrayType(
+    ArrayType(org.apache.spark.sql.types.DoubleType, containsNull = false),
+    containsNull = false)
+  override def prettyName: String = "pq_lookup_table"
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    child.dataType match {
+      case ArrayType(org.apache.spark.sql.types.DoubleType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"pq_lookup_table requires array<double>, got ${other.catalogString}")
+    }
+  }
+
+  @transient private lazy val sizes: Array[Int] = codebooks.map(_.length).toArray
+  @transient private lazy val flat: Array[Double] =
+    codebooks.iterator.flatMap(_.iterator.flatMap(_.iterator)).toArray
+
+  override def nullSafeEval(input: Any): Any =
+    PqLookupTable.eval(input.asInstanceOf[ArrayData], flat, sizes, dsub)
+
+  override protected def doGenCode(
+      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
+      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
+      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
+    nullSafeCodeGen(ctx, ev, v => {
+      val cRef = ctx.addReferenceObj("codebooks", flat, "double[]")
+      val sRef = ctx.addReferenceObj("codebookSizes", sizes, "int[]")
+      s"${ev.value} = graft.functions.PqLookupTable$$.MODULE$$.eval(" +
+        s"$v, $cRef, $sRef, $dsub);"
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): PqLookupTable =
+    copy(child = newChild)
+}
+
+object PqLookupTable {
+  def eval(v: ArrayData, flat: Array[Double], sizes: Array[Int],
+      dsub: Int): ArrayData = {
+    val tables = new Array[Any](sizes.length)
+    var off = 0
+    var s = 0
+    while (s < sizes.length) {
+      val start = s * dsub
+      val n = math.max(0, math.min(dsub, v.numElements() - start))
+      val dots = new Array[Double](sizes(s))
+      var c = 0
+      while (c < sizes(s)) {
+        var d = 0.0
+        var j = 0
+        while (j < n) { d += v.getDouble(start + j) * flat(off + j); j += 1 }
+        dots(c) = d
+        off += dsub
+        c += 1
+      }
+      tables(s) = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(dots)
+      s += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(tables)
+  }
+}
+
 case class VectorDot(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -1267,6 +1355,13 @@ object GraftFunctions {
   def argTopCells(vec: Column, centroids: Seq[Array[Double]], nprobe: Int): Column =
     toColumn(ArgTopCells(exprOf(vec),
       centroids.iterator.map(_.toVector).toVector, nprobe))
+
+  /** Column-API only, like [[bpeTokens]] (codebooks are a JVM object). */
+  def pqLookupTable(
+      vec: Column, codebooks: Seq[Seq[Array[Double]]], dsub: Int): Column =
+    toColumn(PqLookupTable(exprOf(vec),
+      codebooks.iterator.map(_.iterator.map(_.toVector).toVector).toVector,
+      dsub))
 
   def hyperplaneSignatures(
       vec: Column, dim: Int, bits: Int, tables: Int, seed: Long = 7L): Column =

@@ -127,19 +127,19 @@ object Ivf {
     import spark.implicits._
     val raw = corpus
       .select(col("vec_id"), col("vector").cast("array<double>").as("v"))
-    // Bounded small-corpus fast path (the nearDupClusters driver-side
-    // pattern): ONE limited collect probes the size; a sub-20k-vector
-    // training set is ≤ 10 MB and Lloyd's on it is milliseconds of
-    // driver arithmetic against 1+iters scheduled jobs of pure
-    // overhead. Identical update rule (>= tie to the larger index,
-    // empty cell keeps its centroid, renormalize) — only the float
-    // summation order differs from the tree combine. An overflowing
-    // corpus falls through to the treeAggregate path, which is also
-    // how FAISS trains at scale: on a bounded sample.
-    val probe = raw.orderBy(col("vec_id")).limit(driverMaxVectors + 1)
-      .select(col("v")).collect()
-    if (probe.length <= driverMaxVectors) {
-      val vecs = probe.map(r => unitize(r.getSeq[Double](0).toArray))
+    // Bounded small-corpus fast path (graft.ops.DriverLocal): ONE
+    // limited collect probes the size; a sub-20k-vector training set
+    // is ≤ 10 MB and Lloyd's on it is milliseconds of driver
+    // arithmetic against 1+iters scheduled jobs of pure overhead.
+    // Identical update rule (>= tie to the larger index, empty cell
+    // keeps its centroid, renormalize) — only the float summation
+    // order differs from the tree combine. An overflowing corpus (or
+    // driverMaxVectors = 0) falls through to the treeAggregate path,
+    // which is also how FAISS trains at scale: on a bounded sample.
+    val byId = raw.orderBy(col("vec_id")).select(col("v"))
+    val probe = graft.ops.DriverLocal.collect(byId, driverMaxVectors)
+    if (probe.isDefined) {
+      val vecs = probe.get.map(r => unitize(r.getSeq[Double](0).toArray))
       var centroids = vecs.take(nlist).map(_.clone())
       val k = centroids.length
       for (_ <- 0 until iters) {
@@ -155,7 +155,7 @@ object Ivf {
       }
       return centroids.toSeq
     }
-    var centroids: Array[Array[Double]] = probe.take(nlist)
+    var centroids: Array[Array[Double]] = byId.limit(nlist).collect()
       .map(r => unitize(r.getSeq[Double](0).toArray))
     val vecs = raw.select(col("v")).as[Seq[Double]].rdd
       .map(s => unitize(s.toArray))
@@ -473,8 +473,9 @@ object Ivf {
 
   /** IVF-PQ top-k by ASYMMETRIC DISTANCE (ADC): the query stays
     * full-precision; per subspace it precomputes the `ksub` dots
-    * against the codebook ONCE (a per-query LUT, built before the
-    * probe fan-out), and scoring a corpus vector is `m` table lookups
+    * against the codebook ONCE (a per-query LUT, one native
+    * [[graft.functions.PqLookupTable]] built before the probe
+    * fan-out), and scoring a corpus vector is `m` table lookups
     * summed — never a reconstruction, never a stored float vector.
     * `score ≈ cos(q, v)` because codes encode the UNIT corpus vector.
     * Output shape matches [[Knn.bruteForceKnn]]; ranking quality is
@@ -487,13 +488,8 @@ object Ivf {
       pq: PqModel,
       k: Int,
       nprobe: Int = 8): DataFrame = {
-    val lut = array((0 until pq.m).map { s =>
-      array(pq.codebooks(s).map { c =>
-        graft.functions.GraftFunctions.vectorDot(
-          slice(col("qv"), s * pq.dsub + 1, pq.dsub),
-          array(c.map(lit(_)): _*))
-      }: _*)
-    }: _*)
+    val lut = graft.functions.GraftFunctions.pqLookupTable(
+      col("qv"), pq.codebooks, pq.dsub)
     val q = broadcast(queries
       .select(col("query_id"), col("vector").cast("array<double>").as("qv"))
       .withColumn("qn", Knn.norm(col("qv")))

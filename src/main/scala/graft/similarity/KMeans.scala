@@ -1,7 +1,10 @@
 package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
+
+import graft.functions.ClusterSumAgg
 
 /** Deterministic distributed k-means (Lloyd's) over embedding columns
   * — the corpus-analysis / SemDeDup-style clustering primitive, built
@@ -84,7 +87,19 @@ object KMeans {
   /** Train `k` centroids with `iters` fixed Lloyd's iterations.
     * Deterministic and layout-independent: assignment is a pure
     * function of (vector, centroids); centroid updates are exact
-    * decimal sums divided once in double.
+    * integer 12-dp sums divided once in double.
+    *
+    * Two paths, one result. ONE `limit(driverMaxVectors + 1)` collect
+    * of the filtered vectors ([[graft.ops.DriverLocal.collect]])
+    * decides the path. Up to `driverMaxVectors` vectors (≈ 10 MB at
+    * the 20k default and dim 64), the iterations run on the driver and
+    * feed the collected rows through the very `ClusterSumAgg.Step` the
+    * distributed aggregate's `update` runs per task (rounding each
+    * vector once instead of once per iteration); above it, each
+    * iteration is one aggregate job over the persisted vectors. The
+    * sums are integers, so their order does not matter, and the
+    * centroids come out bit-identical on either path.
+    * `driverMaxVectors = 0` forces the distributed path.
     */
   def train(
       df: DataFrame,
@@ -93,48 +108,78 @@ object KMeans {
       k: Int,
       dim: Int,
       iters: Int = 5,
-      init: Option[Seq[Array[Double]]] = None): Seq[Array[Double]] = {
+      init: Option[Seq[Array[Double]]] = None,
+      driverMaxVectors: Long = 20000L): Seq[Array[Double]] = {
     require(k >= 1 && iters >= 0, s"need k >= 1, iters >= 0; got $k/$iters")
     init.foreach(c => require(c.size == k && c.forall(_.length == dim),
       s"init must be $k centroids of dim $dim"))
     val vecs0 = df
       .select(vecAsDouble(col(vecCol)).as("v"))
       .filter(col("v").isNotNull && size(col("v")) === dim)
-    // same guard as Pca.moments: the O(k·dim)-per-row fused update
-    // dominates the scan, so a small corpus in few files must spread
-    // across cores (skipped when the input is already wide)
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val vecs =
-      if (vecs0.rdd.getNumPartitions < par) vecs0.repartition(par) else vecs0
     var centroids = init.getOrElse(seeds(
       df.filter(size(vecAsDouble(col(vecCol))) === dim),
       idCol, vecCol, k))
     require(centroids.nonEmpty, "corpus has no vector of the given dim")
-    for (_ <- 0 until iters) {
-      // one fused assign+accumulate pass (graft.functions.ClusterSumAgg):
-      // no explode, no exchange — each task holds the whole k·(dim+1)
-      // update state as two long arrays of exact 12-dp unscaled sums,
-      // bit-identical to the previous exploded (cluster, dim)-keyed
-      // DECIMAL aggregate by the same rounding-and-integer-sum argument
-      // as Pca.moments (the q_kmeans_assign golden pins this)
-      val aggCol = org.apache.spark.sql.GraftSqlShims.column(
-        graft.functions.ClusterSumAgg(
-          org.apache.spark.sql.GraftSqlShims.expression(col("v")),
-          centroids.map(_.toVector).toVector)
-          .toAggregateExpression())
-      val s = vecs.agg(aggCol.as("u")).head().getStruct(0)
-      val counts = s.getSeq[Long](0)
-      val cells = s.getSeq[Long](1)
-      centroids = centroids.zipWithIndex.map { case (old, i) =>
-        if (counts(i) == 0L) old
-        else Array.tabulate(dim) { j =>
-          new java.math.BigDecimal(
-            java.math.BigInteger.valueOf(cells(i * dim + j)), 12)
-            .doubleValue / counts(i)
+    if (iters == 0) return centroids
+    // one fused assign+accumulate pass (graft.functions.ClusterSumAgg):
+    // no explode, no exchange — each task holds the whole k·(dim+1)
+    // update state as two long arrays of exact 12-dp unscaled sums,
+    // bit-identical to the previous exploded (cluster, dim)-keyed
+    // DECIMAL aggregate by the same rounding-and-integer-sum argument
+    // as Pca.moments (the q_kmeans_assign golden pins this)
+    def frozen(cen: Seq[Array[Double]]) = cen.map(_.toVector).toVector
+    graft.ops.DriverLocal.collect(vecs0, driverMaxVectors) match {
+      case Some(rows) =>
+        val vs = rows.map(r =>
+          UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](0).toArray))
+        // the decimal rounding does not depend on the centroids (and
+        // dominates the pass): once per vector, not once per iteration
+        val us = vs.map(ClusterSumAgg.rounded)
+        for (_ <- 0 until iters) {
+          val step = new ClusterSumAgg.Step(frozen(centroids))
+          val buf = step.zero()
+          vs.indices.foreach(i => step.add(buf, vs(i), us(i)))
+          centroids = recenter(centroids, buf.counts.toSeq, buf.sums.toSeq)
         }
-      }
+      case None =>
+        // same guard as Pca.moments: the O(k·dim)-per-row fused update
+        // dominates the scan, so a small corpus in few files must
+        // spread across cores (skipped when the input is already
+        // wide); persisted once, or every iteration re-runs the scan
+        // and the repartition shuffle
+        val par = df.sparkSession.sparkContext.defaultParallelism
+        val vecs = (if (vecs0.rdd.getNumPartitions < par) vecs0.repartition(par)
+          else vecs0)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try for (_ <- 0 until iters) {
+          val aggCol = org.apache.spark.sql.GraftSqlShims.column(
+            ClusterSumAgg(
+              org.apache.spark.sql.GraftSqlShims.expression(col("v")),
+              frozen(centroids)).toAggregateExpression())
+          val s = vecs.agg(aggCol.as("u")).head().getStruct(0)
+          centroids = recenter(centroids, s.getSeq[Long](0), s.getSeq[Long](1))
+        } finally vecs.unpersist()
     }
     centroids
+  }
+
+  /** The Lloyd's update from one pass's (counts, 12-dp unscaled sums):
+    * an empty cluster keeps its centroid, else each coordinate is the
+    * exact sum divided once by the count.
+    */
+  private def recenter(
+      old: Seq[Array[Double]],
+      counts: Seq[Long],
+      cells: Seq[Long]): Seq[Array[Double]] = {
+    val dim = old.head.length
+    old.zipWithIndex.map { case (c, i) =>
+      if (counts(i) == 0L) c
+      else Array.tabulate(dim) { j =>
+        new java.math.BigDecimal(
+          java.math.BigInteger.valueOf(cells(i * dim + j)), 12)
+          .doubleValue / counts(i)
+      }
+    }
   }
 
   /** Assignment projection: the input plus a 0-based `cluster` column.

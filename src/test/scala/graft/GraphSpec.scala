@@ -43,6 +43,80 @@ class GraphSpec extends SparkTestBase {
     assert(got == Set(500000000L))
   }
 
+  private def ranksOf(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r =>
+      (if (r.isNullAt(0)) None else Some(r.getLong(0))) -> r.getLong(1)).toMap
+
+  test("pageRankInt on an empty edge list is an empty (node, rank) frame " +
+    "on both paths") {
+    val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
+    for (bound <- Seq(1000000L, 0L); iters <- Seq(0, 3)) {
+      val got = Graph.pageRankInt(edges, col("src"), col("dst"), iters,
+        driverMaxEdges = bound)
+      assert(got.schema.map(f => f.name -> f.dataType.simpleString) ==
+        Seq("node" -> "bigint", "rank" -> "bigint"))
+      assert(got.isEmpty, s"bound $bound, iters $iters")
+    }
+  }
+
+  test("pageRankInt on a single edge, hand-checked on both paths") {
+    val edges = Seq((1L, 2L)).toDF("src", "dst")
+    // n = 2: base = 15e9 / 200, uniform start 5e8; node 1 is dangling
+    // into nothing and only ever keeps base
+    val base = 75000000L
+    val want = Map(
+      0 -> Map(1L -> 500000000L, 2L -> 500000000L),
+      1 -> Map(1L -> base, 2L -> (base + 85 * 500000000L / 100)),
+      2 -> Map(1L -> base, 2L -> (base + 85 * base / 100)))
+    for (bound <- Seq(1000000L, 0L); (iters, ranks) <- want) {
+      val got = ranksOf(Graph.pageRankInt(edges, col("src"), col("dst"),
+        iters, driverMaxEdges = bound))
+      assert(got == ranks.map { case (k, v) => Some(k) -> v },
+        s"bound $bound, iters $iters")
+    }
+  }
+
+  test("pageRankInt: the driver path equals the distributed path exactly " +
+    "(null endpoints, self-loops, parallel edges, dangling nodes)") {
+    val rnd = new scala.util.Random(20261017L)
+    for (g <- 0 until 40) {
+      val nodes = 1 + rnd.nextInt(25)
+      def end(): Option[Long] =
+        if (rnd.nextInt(12) == 0) None else Some(rnd.nextInt(nodes).toLong)
+      val base = Seq.fill(1 + rnd.nextInt(60))((end(), end()))
+      // repeat some edges verbatim: parallel edges count once each
+      val edgeList = base ++ base.take(rnd.nextInt(5))
+      val edges = edgeList.toDF("src", "dst").repartition(1 + rnd.nextInt(5))
+      val iters = if (g < 2) g else 1 + rnd.nextInt(5)
+      val checkEvery = 1 + rnd.nextInt(3)
+      val local = ranksOf(Graph.pageRankInt(edges, col("src"), col("dst"),
+        iters, checkEvery))
+      val dist = ranksOf(Graph.pageRankInt(edges, col("src"), col("dst"),
+        iters, checkEvery, driverMaxEdges = 0L))
+      assert(local == dist,
+        s"graph $g (iters $iters, edges $edgeList): driver $local vs " +
+          s"distributed $dist")
+    }
+  }
+
+  test("pageRankInt on a 5k-edge graph launches a handful of jobs and " +
+    "leaves no pin") {
+    val edges = (0 until 5000).map(i =>
+      (i.toLong % 700, (i * 31 + 7).toLong % 700)).toDF("src", "dst")
+    val pins0 = spark.sparkContext.getPersistentRDDs.keySet
+    var ranks = Map.empty[Option[Long], Long]
+    val jobs = jobsOf {
+      ranks = ranksOf(Graph.pageRankInt(edges, col("src"), col("dst"), 3))
+    }
+    info(s"${jobs.size} jobs")
+    // edge cut 1 + bounded probe (1-2 incremental takes)
+    assert(jobs.size <= 6, s"pageRankInt launched:\n${jobs.mkString("\n")}")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == pins0,
+      "the driver path left a persisted RDD behind")
+    assert(ranks == ranksOf(Graph.pageRankInt(edges, col("src"), col("dst"),
+      3, driverMaxEdges = 0L)))
+  }
+
   test("connectedComponents labels every node with its component min") {
     // two chains + a triangle with a self-loop and reversed/dup edges
     val edges = Seq(

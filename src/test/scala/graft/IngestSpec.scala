@@ -687,28 +687,6 @@ class IngestSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  /** The Spark jobs `body` launches, recorded by a listener as their
-    * final stage's call site and operators: their number is a
-    * load-independent cost counter, unlike wall time.
-    */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        sites.add(e.stageInfos.lastOption.fold("?") { st =>
-          st.rddInfos.flatMap(_.scope.map(_.name)).distinct
-            .mkString(s"${st.name} [", ",", "]")
-        })
-    }
-    org.apache.spark.GraftCoreShims.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.GraftCoreShims.drainListenerBus(spark.sparkContext)
-      sites.toArray(Array.empty[String]).toSeq
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("applyMicroBatch costs a small fixed number of Spark jobs: append, " +
     "edit/remove over a 3-version snapshot, products+customers") {
     val dir = java.nio.file.Files.createTempDirectory("graft-jobs")

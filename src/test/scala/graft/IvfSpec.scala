@@ -144,6 +144,69 @@ class IvfSpec extends SparkTestBase {
     assert(checked >= 3 * 30, s"too few pairs observable: $checked")
   }
 
+  test("the native PQ lookup table equals the composed-expression form, " +
+    "for query vectors shorter and longer than dim") {
+    val c = (0 until 40).map { i =>
+      (i.toLong, (0 until 8).map(j => math.cos(i * 8 + j + 0.5)))
+    }.toDF("vec_id", "vector")
+    val pq = Ivf.trainPq(c, dim = 8, m = 4, ksub = 8, iters = 3)
+    // the form the expression replaced: m·ksub literal dot trees
+    val composed = array((0 until pq.m).map { s =>
+      array(pq.codebooks(s).map { cb =>
+        graft.functions.GraftFunctions.vectorDot(
+          slice(col("qv"), s * pq.dsub + 1, pq.dsub),
+          array(cb.toSeq.map(lit(_)): _*))
+      }: _*)
+    }: _*)
+    val native = graft.functions.GraftFunctions.pqLookupTable(
+      col("qv"), pq.codebooks, pq.dsub)
+    // lengths 0..11 cover empty, partial and missing subspaces and a
+    // tail past dim
+    val qs = (0 to 11).map(n => (n, (0 until n).map(j => math.sin(n + j * 1.7))))
+      .toDF("n", "qv")
+    val got = qs.select(col("n"), native.as("a"), composed.as("b")).collect()
+    assert(got.length == 12)
+    got.foreach { r =>
+      assert(r.getSeq[Seq[Double]](1) == r.getSeq[Seq[Double]](2),
+        s"lookup table drifted at query length ${r.getInt(0)}")
+    }
+  }
+
+  test("searchIndexPq runs without a whole-stage codegen fallback") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val fallbacks = new java.util.concurrent.atomic.AtomicInteger
+    val appender = new AbstractAppender("ivfspec-codegen", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage
+            .startsWith("Whole-stage codegen disabled")) fallbacks.incrementAndGet()
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val name = "org.apache.spark.sql.execution.WholeStageCodegenExec"
+    val lc = new LoggerConfig(name, Level.WARN, false)
+    lc.addAppender(appender, Level.WARN, null)
+    ctx.getConfiguration.addLogger(name, lc)
+    ctx.updateLoggers()
+    try {
+      // the q_knn_ivfpq shape: 16 subspaces of 32 codes over dim 64
+      val cen = Ivf.train(corpus, dim = 64, nlist = 16)
+      val pq = Ivf.trainPq(corpus, dim = 64, m = 16, ksub = 32)
+      val got = Ivf.searchIndexPq(queries, Ivf.indexPq(corpus, cen, pq),
+        cen, pq, k = 10, nprobe = 8).collect()
+      assert(got.nonEmpty)
+    } finally {
+      ctx.getConfiguration.removeLogger(name)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    assert(fallbacks.get == 0,
+      s"${fallbacks.get} stage(s) fell back to interpreted execution")
+  }
+
   test("the PQ model persists and reloads through the table store") {
     val pq = Ivf.trainPq(corpus, dim = 64, m = 8, ksub = 32)
     val store = new graft.streaming.TableStore(

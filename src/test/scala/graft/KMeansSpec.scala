@@ -147,6 +147,69 @@ class KMeansSpec extends SparkTestBase {
     checkGoldenTsv("q_kmeans_assign")
   }
 
+  private def trainBoth(
+      df: org.apache.spark.sql.DataFrame, k: Int, dim: Int, iters: Int)
+      : (Seq[Seq[Double]], Seq[Seq[Double]]) = {
+    def run(bound: Long) = KMeans.train(df, "vec_id", "embedding", k, dim,
+      iters, driverMaxVectors = bound).map(_.toSeq)
+    (run(20000L), run(0L))
+  }
+
+  test("the driver path trains bit-identical centroids to the distributed " +
+    "path: null and wrong-dim vectors, empty clusters, iters 0, " +
+    "repartitioned input") {
+    val emb = Tables.load(spark, sfDir, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>")
+        .as("embedding"))
+    // rows the filter must drop on both paths
+    val noisy = emb.unionByName(Seq(
+      (900001L, null: Seq[Double]), (900002L, Seq(1.0, 2.0)),
+      (900003L, Seq.fill(65)(0.5))).toDF("vec_id", "embedding"))
+    for ((df, iters) <- Seq(noisy -> 3, noisy -> 0,
+        emb.repartition(13) -> 4)) {
+      val (local, dist) = trainBoth(df, k = 8, dim = 64, iters)
+      assert(local == dist, s"paths diverged at iters $iters")
+    }
+    // a starved cluster keeps its seed on both paths
+    val pts = Seq((1L, Seq(0.0, 0.0)), (2L, Seq(10.0, 0.0)),
+      (3L, Seq(0.0, 10.0)), (4L, Seq(0.0, 0.0))).toDF("vec_id", "embedding")
+    val (local, dist) = trainBoth(pts, k = 4, dim = 2, iters = 2)
+    assert(local == dist, "paths diverged with an empty cluster")
+  }
+
+  test("the distributed path persists its input once and releases it") {
+    // one file: below the core count, so the loop repartitions
+    val emb = Tables.load(spark, sfDir, "embeddings").coalesce(1)
+    val pins0 = spark.sparkContext.getPersistentRDDs.keySet
+    var dist = Seq.empty[Array[Double]]
+    val iters = 6
+    val jobs = jobsOf {
+      dist = KMeans.train(emb, "vec_id", "embedding", k = 8, dim = 64,
+        iters, driverMaxVectors = 0L)
+    }
+    // unpersisted, every iteration re-scans and re-shuffles the input
+    val scans = jobs.count(_.contains("Scan parquet"))
+    assert(scans < iters, s"the input was re-read per iteration:\n" +
+      jobs.mkString("\n"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == pins0,
+      "the training loop left a persisted RDD behind")
+    val rows = emb.select(col("vec_id"),
+        col("embedding").cast("array<double>"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+    assert(dist.map(_.toSeq) ==
+      naiveTrain(rows, k = 8, dim = 64, iters).map(_.toSeq),
+      "persisting the vectors changed the centroids")
+  }
+
+  test("the driver path trains in a handful of jobs") {
+    val emb = Tables.load(spark, sfDir, "embeddings")
+    val jobs = jobsOf(KMeans.train(emb, "vec_id", "embedding", 8, 64, 5))
+    info(s"${jobs.size} jobs")
+    // seed top-k 1 + bounded probe (1-2 incremental takes), none per
+    // iteration
+    assert(jobs.size <= 4, s"train launched:\n${jobs.mkString("\n")}")
+  }
+
   test("an empty cluster keeps its previous centroid") {
     // 3 distinct points, k=4: one seed duplicates another's location,
     // loses every assignment on the tie rule, and must survive as-is

@@ -64,4 +64,26 @@ trait SparkTestBase extends AnyFunSuite {
         } (${gotRows.length} vs $wantRows rows)")
     spark.catalog.clearCache()
   }
+
+  /** The Spark jobs `body` launches, recorded by a listener as their
+    * final stage's call site and operators: their number is a
+    * load-independent cost counter, unlike wall time.
+    */
+  def jobsOf(body: => Unit): Seq[String] = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sites.add(e.stageInfos.lastOption.fold("?") { st =>
+          st.rddInfos.flatMap(_.scope.map(_.name)).distinct
+            .mkString(s"${st.name} [", ",", "]")
+        })
+    }
+    org.apache.spark.GraftCoreShims.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.GraftCoreShims.drainListenerBus(spark.sparkContext)
+      sites.toArray(Array.empty[String]).toSeq
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
