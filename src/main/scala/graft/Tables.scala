@@ -77,44 +77,4 @@ object Tables {
     "supplier" -> supplier, "part" -> part, "orders" -> orders,
     "lineitem" -> lineitem, "events" -> events,
     "documents" -> documents, "embeddings" -> embeddings)
-
-  private val csvFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** CSV fixture for the S1/S8 scan queries: the `nation` table
-    * exported once as headered multi-part CSV under the system tmpdir,
-    * memoized per (JVM, sf dir) and written via stage + atomic rename —
-    * so the export is a one-time fixture step, never part of a timed or
-    * verified query body, and two concurrent sessions on the same sf
-    * dir cannot race on a half-written directory (VERDICT r2 "What's
-    * wrong #4"). Returns the directory to read.
-    */
-  def csvFixture(spark: SparkSession, sfDir: String): String =
-    csvFixtureCache.computeIfAbsent(sfDir, { _ =>
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      val dest = Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_csv_${java.lang.Integer.toHexString(sfDir.hashCode)}", "nation")
-      if (!Files.exists(dest.resolve("_SUCCESS"))) {
-        val stage = Files.createTempDirectory("graft_csv_stage")
-        nation(spark, sfDir)
-          .select("n_nationkey", "n_name", "n_regionkey")
-          .repartition(2) // ≥2 part files ⇒ the read is a real union scan
-          .write.mode("overwrite").option("header", "true")
-          .csv(stage.resolve("nation").toString)
-        Files.createDirectories(dest.getParent)
-        try Files.move(stage.resolve("nation"), dest,
-          StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException |
-               _: java.nio.file.DirectoryNotEmptyException =>
-            // another session won the race — its fixture is complete
-        }
-        // drop the staging dir (and, for a lost race, its CSV copy)
-        val walk = Files.walk(stage)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      }
-      dest.toString
-    })
 }

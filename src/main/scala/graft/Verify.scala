@@ -23,10 +23,11 @@ object Verify {
     selected.foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
-        // oracle-checked queries must pass the hash-stability lint
-        // (no array cells, no unrounded high-scale decimal→double) —
-        // fail the dump loudly rather than hand the driver a red row
-        if (SparkEntry.oracleSql.contains(name)) OracleLint.enforce(name, df)
+        // every query is oracle-checked, so every one must pass the
+        // hash-stability lint (no array cells, no unrounded high-scale
+        // decimal→double) — fail the dump loudly rather than hand the
+        // driver a red row
+        OracleLint.enforce(name, df)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

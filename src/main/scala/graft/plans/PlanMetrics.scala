@@ -12,62 +12,21 @@ import org.apache.spark.sql.execution.SparkPlan
   * queries is PLANNED (never executed — `queryExecution.sparkPlan`,
   * the deterministic pre-AQE physical plan) and reduced to a row of
   * physical-node counts, which the DuckDB oracle pins as literal
-  * VALUES. A plan regression — a broadcast that silently becomes a
-  * sort-merge join, a new exchange, a cartesian — now fails the
-  * correctness gate as a hash mismatch instead of waiting for a
-  * human to read `.explain`.
+  * VALUES ([[Pinned]]). A plan regression — a broadcast that
+  * silently becomes a sort-merge join, a new exchange, a cartesian —
+  * now fails the correctness gate as a hash mismatch instead of
+  * waiting for a human to read `.explain`.
   *
   * Most audited queries are construction-pure (no fixture induction,
   * no eager checkpoint at build time) so auditing them runs zero
   * Spark jobs; the four scale-claim representatives materialize
-  * bounded state at construction (see [[Audited]]'s note). In every
+  * bounded state at construction (see [[Pinned]]'s note). In every
   * case the emitted counts depend only on the query text, the
   * session conf the engine itself pins ([[graft.GraftSession]]), and
   * the driver-generated testdata's statistics — deterministic at the
   * correctness gate's sf0.01.
   */
 object PlanMetrics {
-
-  /** The audited list: one representative per certified plan-shape
-    * family — flagship agg, star join, enrich/upsert joins, anti
-    * join, point lookup, top-k, window, set op, plus (r14) one
-    * representative per LLM-pipeline SCALE claim: the banded
-    * near-dup join (no cartesian, the (b, v) exchange shape), banded
-    * top-k search (bounded-heap aggregate, never a window sort), the
-    * prefix-filtered pair path (exchange count; broadcast-probe
-    * verify — audited through the Jaccard form: the containment twin
-    * shares the machinery but MATERIALIZES-then-releases its result
-    * by contract, so its "plan" is a scan of the checkpoint), and
-    * the Bloom-gated exact incremental dedup (probe in the scan
-    * stage). KEEP stable: every name here has a pinned row
-    * in the q_plan_audit oracle, and editing one of these queries
-    * means re-pinning its row (that is the feature, not a chore —
-    * the diff IS the plan review).
-    *
-    * Construction purity: the first ten queries build zero Spark
-    * jobs. The four scale representatives materialize BOUNDED state
-    * at plan construction (the modality pipelines localCheckpoint
-    * their hash frame; the dedup query builds its Bloom; the prefix
-    * path runs one count to pick its verify strategy) — bounded at
-    * the gate's sf0.01 and irrelevant to the emitted row, which
-    * counts node classes of the resulting static plan and stays
-    * deterministic given the pinned session conf.
-    */
-  val Audited: Seq[String] = Seq(
-    "q1_lineitem_agg",
-    "q5_local_supplier_volume",
-    "q_daily_load",
-    "q_membership_level",
-    "q_top5_sales",
-    "q_point_lookup",
-    "q_sync_delete_antijoin",
-    "q_window_rank",
-    "q_union_all",
-    "q_exists_semijoin",
-    "q_image_neardup",
-    "q_image_search",
-    "q_ngram_jaccard_prefix",
-    "q_dedup_incremental_exact")
 
   final case class PlanRow(
       query: String,
@@ -77,6 +36,66 @@ object PlanMetrics {
       n_hash_aggregates: Int,
       has_cartesian: Boolean,
       has_topk: Boolean)
+
+  /** The audited queries with their PINNED rows — the reviewed
+    * static-plan shapes: one representative per certified plan-shape
+    * family (flagship agg; star join — q5 broadcasts all five dims;
+    * enrich/upsert joins; anti join; point lookup; top-k as
+    * TakeOrderedAndProject; window; set op; the point lookup and the
+    * anti/semi joins run exchange-free), plus (r14) one representative
+    * per LLM-pipeline SCALE claim: the banded near-dup join (one
+    * distinct exchange + the band equi-join, NO cartesian), banded
+    * top-k search (broadcast band probe; top-k is the bounded-heap
+    * AGGREGATE, so has_topk stays false by design — never a window
+    * sort), the prefix-filtered pair path (exchange count;
+    * broadcast-probe verify, zero sort-merge joins — audited through
+    * the Jaccard form: the containment twin shares the machinery but
+    * MATERIALIZES-then-releases its result by contract, so its "plan"
+    * is a scan of the checkpoint), and the Bloom-gated exact
+    * incremental dedup (one exchange, broadcast index probe in the
+    * scan stage). Any drift is a plan regression that fails the gate
+    * until re-reviewed: editing one of these queries means re-pinning
+    * its row (that is the feature, not a chore — the diff IS the plan
+    * review).
+    *
+    * Construction purity: all but four queries build zero Spark jobs.
+    * The four scale representatives (q_image_neardup, q_image_search,
+    * q_ngram_jaccard_prefix, q_dedup_incremental_exact) materialize
+    * BOUNDED state at plan construction (the modality pipelines
+    * localCheckpoint their hash frame; the dedup query builds its
+    * Bloom; the prefix path runs one count to pick its verify
+    * strategy) — bounded at the gate's sf0.01 and irrelevant to the
+    * emitted row, which counts node classes of the resulting static
+    * plan and stays deterministic given the pinned session conf.
+    */
+  val Pinned: Seq[PlanRow] = Seq(
+    PlanRow("q1_lineitem_agg",           1, 0, 0, 2, false, false),
+    PlanRow("q5_local_supplier_volume",  1, 5, 0, 2, false, false),
+    PlanRow("q_daily_load",              1, 0, 0, 2, false, false),
+    PlanRow("q_dedup_incremental_exact", 1, 1, 0, 2, false, false),
+    PlanRow("q_exists_semijoin",         0, 1, 0, 0, false, false),
+    PlanRow("q_image_neardup",           1, 1, 0, 2, false, false),
+    PlanRow("q_image_search",            2, 1, 0, 2, false, false),
+    PlanRow("q_membership_level",        1, 1, 0, 2, false, false),
+    PlanRow("q_ngram_jaccard_prefix",    2, 4, 0, 4, false, false),
+    PlanRow("q_point_lookup",            0, 0, 0, 0, false, false),
+    PlanRow("q_sync_delete_antijoin",    0, 1, 0, 0, false, false),
+    PlanRow("q_top5_sales",              0, 0, 0, 0, false, true),
+    PlanRow("q_union_all",               0, 0, 0, 0, false, false),
+    PlanRow("q_window_rank",             1, 0, 0, 0, false, false))
+
+  val Audited: Seq[String] = Pinned.map(_.query)
+
+  /** The q_plan_audit oracle: [[Pinned]] as a literal VALUES table. */
+  val oracleSql: String = {
+    def sqlLit(v: Any): String = v match {
+      case s: String => s"'$s'"
+      case x => x.toString
+    }
+    Pinned.map(_.productIterator.map(sqlLit).mkString("(", ", ", ")"))
+      .mkString("SELECT * FROM (VALUES ", ", ",
+        Pinned.head.productElementNames.mkString(") AS t(", ", ", ")"))
+  }
 
   /** Reduce one physical plan to its audit row. Node classes, not
     * string greps — subqueries are traversed too (a broadcast-filter

@@ -117,32 +117,20 @@ object Ingest {
     * the whole batch through ONE partition — the classic streaming-path
     * scale-killer. `orderBy` should be (near-)unique: rows tied on the
     * full key may receive either of their ids across runs.
-    */
-  def assignSaleIds(batch: DataFrame, maxExisting: Long, orderBy: Seq[String]): DataFrame =
-    assignSaleIdsManaged(batch, maxExisting, orderBy)._1
-
-  /** [[assignSaleIds]] plus a release handle: the intermediate frame is
-    * cached (the count pass and the output pass must see the SAME range
-    * boundaries — `repartitionByRange` samples its input), and the
-    * cache must live until the caller's final action has consumed the
-    * ids. Call the handle in a `finally` once the batch is written —
-    * [[applyMicroBatch]] does — or the entry stays pinned for the
-    * session (ADVICE r2: one leaked MEMORY_AND_DISK entry per
+    *
+    * Returns the frame, the number of ids assigned `n` (free: the
+    * per-partition counts are already collected; it lets the ingest
+    * keep the id counter as snapshot metadata instead of re-scanning
+    * the id column every batch) and a release handle. The intermediate
+    * frame is cached (the count pass and the output pass must see the
+    * SAME range boundaries — `repartitionByRange` samples its input),
+    * and the cache must live until the caller's final action has
+    * consumed the ids: call the handle in a `finally` once the batch
+    * is written — [[applyMicroBatch]] does — or the entry stays pinned
+    * for the session (ADVICE r2: one leaked MEMORY_AND_DISK entry per
     * micro-batch).
     */
-  def assignSaleIdsManaged(
-      batch: DataFrame, maxExisting: Long,
-      orderBy: Seq[String]): (DataFrame, () => Unit) =
-    assignSaleIdsCounted(batch, maxExisting, orderBy) match {
-      case (df, _, release) => (df, release)
-    }
-
-  /** [[assignSaleIdsManaged]] plus the number of ids assigned — free
-    * (the per-partition counts are already collected), and what lets
-    * the ingest maintain the id counter as snapshot metadata instead
-    * of re-scanning the id column every batch.
-    */
-  def assignSaleIdsCounted(
+  def assignSaleIds(
       batch: DataFrame, maxExisting: Long,
       orderBy: Seq[String]): (DataFrame, Long, () => Unit) = {
     val orderCols = orderBy.map(col)
@@ -497,7 +485,7 @@ object Ingest {
         val (events, nAssigned, release) =
           if (!c.kinds.contains("sale")) (saleEvents, 0L, () => ())
           else {
-            val (inserts, n, release) = assignSaleIdsCounted(
+            val (inserts, n, release) = assignSaleIds(
               saleEvents.filter(col("kind") === "sale").drop("sale_id"),
               maxId, Seq("seq"))
             (inserts

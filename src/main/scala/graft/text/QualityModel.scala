@@ -130,6 +130,11 @@ object QualityModel {
       "stopword_rate" -> wordHits(text, Stopwords).cast("double") / safeToks)
   }
 
+  /** Inputs of at most this many rows train on the driver (see
+    * [[train]]); larger ones run the distributed loop.
+    */
+  val LocalMaxRows: Long = 1000000L
+
   /** Train logistic weights by batch gradient descent over
     * STANDARDIZED features (z-scores from one exact-decimal stats
     * pass — raw features at wildly different scales would saturate
@@ -186,12 +191,9 @@ object QualityModel {
     // weights are bit-identical (QualityModelSpec pins the two paths
     // equal; the DuckDB oracle replay is a third pin). The input
     // count is metadata-only on a parquet scan; na.drop can only
-    // shrink it. ~(d+1)·8B a row — the default 1M-row bound keeps the
-    // driver footprint ≤ ~100 MB; override per tier via
-    // SPARK_GRAFT_GD_LOCAL_ROWS (0 forces the distributed loop).
-    val localRows = sys.env
-      .getOrElse("SPARK_GRAFT_GD_LOCAL_ROWS", "1000000").toLong
-    if (localRows > 0 && df.count() <= localRows)
+    // shrink it. ~(d+1)·8B a row — the bound keeps the driver
+    // footprint ≤ ~100 MB.
+    if (df.count() <= LocalMaxRows)
       trainLocal(frame0.collect(), d, iters, lr)
     else trainDistributed(frame0, d, iters, lr)
   }

@@ -76,11 +76,6 @@ object QueryProfile {
     spark.sparkContext.addSparkListener(listener)
     names.foreach { n =>
       spark.sparkContext.setJobDescription(s"profile:$n")
-      // induction queries re-train per sample in Bench — mirror that
-      // here, or the warm pass's memo hit is what gets profiled
-      // (r17: q_quality_model profiled as one 3 ms stage that way)
-      if (n == "q_quality_model" || n == "q_bpe_vocab")
-        SparkEntry.clearInductionMemos(dir)
       val t0 = System.nanoTime()
       SparkEntry.queries(n)(spark, dir)
         .write.mode("overwrite").format("noop").save()

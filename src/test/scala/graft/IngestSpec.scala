@@ -55,12 +55,18 @@ class IngestSpec extends SparkTestBase {
     val batch = spark.range(n)
       .select((col("id") * 37 % n).as("k"), lit("x").as("payload"))
       .repartition(8)
-    val got = Ingest.assignSaleIds(batch, 500L, Seq("k"))
-      .select("k", "sale_id").as[(Long, Long)].collect()
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
+    val (df, assigned, release) = Ingest.assignSaleIds(batch, 500L, Seq("k"))
+    val got =
+      try df.select("k", "sale_id").as[(Long, Long)].collect()
+      finally release()
+    assert(assigned == n)
     val ids = got.map(_._2).sorted
     assert(ids.toSeq == (501L to 500L + n), "ids must be dense and unique")
     // id order must follow key order
     assert(got.sortBy(_._1).map(_._2).toSeq == got.map(_._2).sorted.toSeq)
+    // the release handle drops the cache the assignment pinned
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- pinned).isEmpty)
   }
 
   test("parseEntity drops corrupt JSON instead of emitting null-keyed rows") {
@@ -796,11 +802,13 @@ class IngestSpec extends SparkTestBase {
     try {
       val batch = spark.range(500)
         .select(col("id").as("k"), lit("x").as("payload"))
-      val (got, release) = Ingest.assignSaleIdsManaged(batch, 0L, Seq("k"))
+      val pinned = spark.sparkContext.getPersistentRDDs.keySet
+      val (got, _, release) = Ingest.assignSaleIds(batch, 0L, Seq("k"))
       try {
         val ids = got.select("sale_id").as[Long].collect().sorted
         assert(ids.toSeq == (1L to 500L))
       } finally release()
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- pinned).isEmpty)
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 }

@@ -86,7 +86,7 @@ class QualityModelSpec extends SparkTestBase {
 
   test("local fast path and distributed loop learn identical weights") {
     // train() takes the driver-bounded local path below the
-    // SPARK_GRAFT_GD_LOCAL_ROWS gate (always at test scale); pin it
+    // LocalMaxRows gate (always at test scale); pin it
     // bit-identical to the distributed aggregation loop it replaced
     // there, on the same feature frame
     val docs = Tables.load(spark, sfDir, "documents")
