@@ -7,7 +7,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at
-  * SPARK_GRAFT_SF_DIR (default sf0.1), local[32].
+  * SPARK_GRAFT_SF_DIR (default sf0.1) on [[GraftSession.cpus]] local
+  * cores.
   *
   * Writes the full result JSON (per-query median seconds, per-query
   * `[min, median, max]` run spread — a contended line self-identifies
@@ -139,11 +140,12 @@ object Bench {
     * ASYNC ContextCleaner — under -Xmx100g that lags many samples
     * behind. The r17 10× campaign measured q_basket_pmi degrading
     * [15.1, 93.5, 251.2] s across its three samples in one JVM from
-    * exactly this accumulation. Between samples nothing may
-    * legitimately stay pinned (the induction memos hold plain values,
-    * fixtures are on-disk paths), so whatever remains is a dead pin of
-    * the sample that just finished — drop it synchronously, OUTSIDE
-    * the timed region, the dropAllShuffles discipline.
+    * exactly this accumulation (history/OPTIMIZATION_r17.md §2.5).
+    * Between samples nothing may legitimately stay pinned (the
+    * induction memos hold plain values, fixtures are on-disk paths),
+    * so whatever remains is a dead pin of the sample that just
+    * finished — drop it synchronously, OUTSIDE the timed region, the
+    * dropAllShuffles discipline.
     */
   private[graft] def dropDeadPins(spark: SparkSession): Unit =
     spark.sparkContext.getPersistentRDDs.valuesIterator
@@ -151,16 +153,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_OUT.json")
-    // shuffle partitions track the core count by default; the scaling
-    // sweeps override this upward (a cluster sizes partitions to the
+    // shuffle partitions track the core count by default; the 10×/100×
+    // tiers override this upward (a cluster sizes partitions to the
     // DATA — pinning 32 at 100× the volume measures spill crossover,
-    // not the operator; PLANS_r11 §4a)
-    val shuffleParts = sys.env
-      .getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus).toInt
-    val spark =
-      GraftSession.builder(s"local[$cpus]", shuffleParts).getOrCreate()
+    // not the operator; history/PLANS_r11.md §4a)
+    val shuffleParts = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .map(_.toInt).getOrElse(GraftSession.cpus)
+    val spark = GraftSession
+      .builder(s"local[${GraftSession.cpus}]", shuffleParts).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val names =
       if (args.nonEmpty) args.toSeq
@@ -302,7 +303,7 @@ object Bench {
     // keeps the contract schema but carries the SLOWEST `TopN` queries
     // (full names, 2-decimal seconds) — the hot-spot signal the
     // per-query map exists for; the fast tail and shuffle bytes live
-    // in full fidelity in BENCH_OUT.json (committed with the round).
+    // in full fidelity in the `out` file.
     val TopN = 48
     val top = results.sortBy(-_._2).take(TopN)
     val qsShort = top.map { case (k, v, _, _, _) => "\"" + k + f"\":$v%.2f" }

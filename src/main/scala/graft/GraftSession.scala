@@ -7,7 +7,16 @@ import org.apache.spark.sql.SparkSession
   * submissions agree on the settings the design depends on.
   */
 object GraftSession {
-  /** @param master             e.g. "local[32]"; on a cluster pass the
+  /** Local core count of the harness mains: `SPARK_GRAFT_CPUS`, else
+    * every core the JVM sees.
+    */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** `local[cpus]` with one shuffle partition per core. */
+  def local(): SparkSession.Builder = builder(s"local[$cpus]", cpus)
+
+  /** @param master             e.g. "local[4]"; on a cluster pass the
     *                           usual yarn/k8s master via spark-submit
     *                           and leave this empty-string to inherit
     * @param shufflePartitions  size to ~2-3× total executor cores (the

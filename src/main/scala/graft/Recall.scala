@@ -11,10 +11,13 @@ import org.apache.spark.sql.functions._
   * uses, with asserted floors — so "rows-only" queries still carry a
   * machine-checkable verdict in the artifacts (VERDICT r2 ask #4).
   *
-  * Ground truths are the engine's own exact operators, each separately
-  * DuckDB-oracle-checked (q_ngram_jaccard_pairs, q_embedding_neardup,
-  * q_knn_bruteforce) or bit-exact by construction (all-pairs Hamming
-  * over the SimHash values; uncapped winnowing fingerprint join).
+  * The approximate side of each pair metric is the registered query's
+  * own frame (`SparkEntry.queries`), so the gate cannot drift from the
+  * query it gates. Ground truths are the engine's own exact operators,
+  * each separately DuckDB-oracle-checked (q_ngram_jaccard_pairs,
+  * q_embedding_neardup, q_knn_bruteforce) or bit-exact by
+  * construction (all-pairs Hamming over the SimHash values; uncapped
+  * winnowing fingerprint join).
   *
   * Emits one JSON object keyed by query name:
   * `{"recall":…,"precision":…,"recall_floor":…,"pass":…,
@@ -54,15 +57,19 @@ object Recall {
     */
   def metrics(spark: SparkSession, sfDir: String): Seq[Metric] = {
     import graft.dedup.Dedup
-    import graft.similarity.{Ivf, Knn}
+    import graft.similarity.Knn
     val docs = Tables.documents(spark, sfDir)
     val emb = Tables.embeddings(spark, sfDir)
+    // recall of registered query `q`'s (a, b) pairs against `truth`
+    def approx(q: String, truth: Set[(Long, Long)], a: String, b: String,
+        floor: Double): Metric =
+      pairMetric(q, truth, pairSet(SparkEntry.queries(q)(spark, sfDir), a, b),
+        floor)
 
     // -- MinHash estimate-only vs exact n-gram Jaccard ≥ 0.8 --
     val jaccardTruth = pairSet(
       Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.8), "doc_a", "doc_b")
-    val mh = pairMetric("q_minhash_est", jaccardTruth,
-      pairSet(Dedup.minhashLsh(docs, "doc_id", "text"), "doc_a", "doc_b"),
+    val mh = approx("q_minhash_est", jaccardTruth, "doc_a", "doc_b",
       floor = 0.9)
 
     // -- SimHash banding vs all-pairs Hamming ≤ 7 (pigeonhole ⇒ the
@@ -75,8 +82,7 @@ object Recall {
       a.crossJoin(b).filter(col("doc_a") < col("doc_b"))
         .filter(bit_count(col("sh_a").bitwiseXOR(col("sh_b"))) <= 7),
       "doc_a", "doc_b")
-    val sim = pairMetric("q_simhash_pairs", simTruth,
-      pairSet(Dedup.simhashPairs(docs, "doc_id", "text", 7), "doc_a", "doc_b"),
+    val sim = approx("q_simhash_pairs", simTruth, "doc_a", "doc_b",
       floor = 0.99)
 
     // -- winnowing overlap vs the uncapped fingerprint join --
@@ -84,21 +90,15 @@ object Recall {
       Dedup.winnowOverlapPairs(docs, "doc_id", "text",
         maxBucket = Int.MaxValue),
       "doc_a", "doc_b")
-    val win = pairMetric("q_doc_winnow_overlap", winTruth,
-      pairSet(Dedup.winnowOverlapPairs(docs, "doc_id", "text"),
-        "doc_a", "doc_b"),
+    val win = approx("q_doc_winnow_overlap", winTruth, "doc_a", "doc_b",
       floor = 0.95)
 
     // -- embedding LSH vs exact all-pairs cosine ≥ 0.4 --
     val embTruth = pairSet(
       Dedup.embeddingNearDup(emb, "vec_id", "embedding", 0.4), "id_a", "id_b")
-    val embLsh = pairMetric("q_embedding_neardup_lsh", embTruth,
-      pairSet(Dedup.embeddingNearDupLsh(emb, "vec_id", "embedding", 64, 0.4),
-        "id_a", "id_b"),
+    val embLsh = approx("q_embedding_neardup_lsh", embTruth, "id_a", "id_b",
       floor = 0.75) // measured 0.86 at 12 OR-tables (was 0.75 at 8)
-    val embIvf = pairMetric("q_embedding_neardup_ivf", embTruth,
-      pairSet(Ivf.cellNearDup(emb, "vec_id", "embedding", 64, 0.4),
-        "id_a", "id_b"),
+    val embIvf = approx("q_embedding_neardup_ivf", embTruth, "id_a", "id_b",
       // auto-nlist (≈√n) + nprobe=6: measured 1.0 at sf0.01 AND 0.96
       // at sf0.1 — the fixed nlist=64 dial this replaces decayed to
       // 0.77 at sf0.1 (recall tracks nprobe/nlist, and fixed nlist
@@ -111,20 +111,14 @@ object Recall {
     val corpus = emb.select(col("vec_id"), col("embedding").as("vector"))
     val knnTruth = pairSet(
       Knn.bruteForceKnn(queries, corpus, 10), "query_id", "vec_id")
-    val knnLsh = pairMetric("q_knn_lsh", knnTruth,
-      pairSet(Knn.lshKnn(queries, corpus, 64, 10), "query_id", "vec_id"),
+    val knnLsh = approx("q_knn_lsh", knnTruth, "query_id", "vec_id",
       floor = 0.75)
-    val knnIvf = pairMetric("q_knn_ivf", knnTruth,
-      pairSet(Ivf.ivfKnn(queries, corpus, 64, 10, nlist = 16, nprobe = 4),
-        "query_id", "vec_id"),
+    val knnIvf = approx("q_knn_ivf", knnTruth, "query_id", "vec_id",
       floor = 0.75)
     // IVF-PQ: compressed codes + asymmetric-distance ranking — the
     // lossy trade is recall, so it carries its own (lower) floor; ADC
     // arithmetic itself is pinned exactly in IvfSpec
-    val knnIvfPq = pairMetric("q_knn_ivfpq", knnTruth,
-      pairSet(Ivf.ivfPqKnn(queries, corpus, 64, 10,
-          nlist = 16, nprobe = 8, m = 16, ksub = 32),
-        "query_id", "vec_id"),
+    val knnIvfPq = approx("q_knn_ivfpq", knnTruth, "query_id", "vec_id",
       floor = 0.6)
 
     // -- learned quality filter: predictive floor for the no-oracle
@@ -243,18 +237,13 @@ object Recall {
     //    design and is informational: accidental (unplanted) close
     //    hashes are CORRECT radius-3 emissions, not errors — the
     //    hash-exact DuckDB oracle certifies them pair for pair.
-    import graft.multimodal.Phash
     val plantedPairs = docs.select((col("doc_id") - col("doc_id") % 2)
         .as("doc_a"), col("doc_id"))
       .groupBy(col("doc_a")).agg(count(lit(1)).as("n"))
       .filter(col("n") === 2)
       .select(col("doc_a"), (col("doc_a") + 1).as("doc_b"))
     val plantedTruth = pairSet(plantedPairs, "doc_a", "doc_b")
-    val phash = pairMetric("q_image_neardup", plantedTruth,
-      pairSet(Phash.neardupPairs(
-          Phash.phash64(spark, Phash.synthGrayPngAssets(spark, docs))
-            .toDF()),
-        "id_1", "id_2"),
+    val phash = approx("q_image_neardup", plantedTruth, "id_1", "id_2",
       floor = 0.95)
 
     // -- video near-dup vs the same planted (2k, 2k+1) truth: the odd
@@ -263,12 +252,7 @@ object Recall {
     //    join find the planted clip pairs". A frame edit of ≤ k hash
     //    bits moves the signature ≤ k bits, so the image family's
     //    floor carries over.
-    import graft.multimodal.VideoPhash
-    val vid = pairMetric("q_video_neardup", plantedTruth,
-      pairSet(VideoPhash.neardupPairs(
-          VideoPhash.signature(spark,
-            VideoPhash.synthPngAviAssets(spark, docs)).toDF()),
-        "id_1", "id_2"),
+    val vid = approx("q_video_neardup", plantedTruth, "id_1", "id_2",
       floor = 0.95)
 
     // -- audio near-dup vs the same planted (2k, 2k+1) truth: the odd
@@ -277,12 +261,7 @@ object Recall {
     //    banded radius-3 join find the planted clip pairs". The bump
     //    moves any window sum ≤ 32768 against typical adjacent-window
     //    gaps of ~2e5, so the image family's floor carries over.
-    import graft.multimodal.AudioPrint
-    val aud = pairMetric("q_audio_neardup", plantedTruth,
-      pairSet(AudioPrint.neardupPairs(
-          AudioPrint.audioprint64(spark,
-            AudioPrint.synthWavPairAssets(spark, docs)).toDF()),
-        "id_1", "id_2"),
+    val aud = approx("q_audio_neardup", plantedTruth, "id_1", "id_2",
       floor = 0.95)
 
     Seq(mh, sim, win, embLsh, embIvf, knnLsh, knnIvf, knnIvfPq, qm,
@@ -306,8 +285,7 @@ object Recall {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "RECALL.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val ms = write(spark, sfDir, out)
     ms.foreach(m => println(

@@ -4366,9 +4366,8 @@ object SparkEntry {
     //      candidate blowup (measured: 148.6k → 9.24M candidates over
     //      the raw corpus's first sweep decade). Oracle = all-pairs
     //      containment restricted to the near-dup survivor set (the
-    //      q_dedup_corpus closure); the sweep probe
-    //      (graft.tools.PipelineProbe) records the candidate
-    //      reduction per tier ----
+    //      q_dedup_corpus closure); the per-tier candidate
+    //      reduction is recorded in history/pipeline_probe_*.json ----
     // the q_ngram_containment construction restricted to the
     // q_dedup_corpus survivor set (near-dup closure at Jaccard >= 0.8,
     // min-id representative per component): exact-first collapse in

@@ -9,8 +9,7 @@ object Verify {
     // dump to those queries (builder-side targeted runs; the driver
     // always passes exactly two args and gets the full sweep)
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val unknown = only.diff(SparkEntry.queries.keySet)

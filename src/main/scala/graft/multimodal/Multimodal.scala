@@ -296,8 +296,8 @@ object Multimodal {
       // pinned to the platform classloader (not the thread-context
       // one): on a cluster with user-jar-first classloading a task
       // TCCL could resolve a different provider set than
-      // AudioSystem's JDK13Services lookup would (ADVICE r16); the
-      // java.desktop module catalog is what this cache must mirror
+      // AudioSystem's JDK13Services lookup would (history/ADVICE.md);
+      // the java.desktop module catalog is what this cache must mirror
       java.util.ServiceLoader
         .load(classOf[AudioFileReader], classOf[javax.sound.sampled.AudioSystem].getClassLoader)
         .iterator().asScala.toList

@@ -146,7 +146,7 @@ object Basket {
         val nItems = st.getLong(0)
         // sum(when(..)) over ZERO rows is null, not 0 — an empty item
         // domain (empty/all-null input at minSupport ≥ 2) would NPE
-        // here (ADVICE r16)
+        // here (history/ADVICE.md)
         val nFreq = if (st.isNullAt(1)) 0L else st.getLong(1)
         val out =
           if (nFreq >= nItems) li // nothing prunable: skip the bloom

@@ -153,10 +153,10 @@ object Fusion {
         round(lit(lambda) * col("rel"), 9).as("mmr_score"))
       .withColumn("rank", lit(1)))
     // superseded per-round cuts release their pinned blocks (the
-    // Graph.cutWithHandle discipline, ADVICE r16): the final sel cut
-    // stays live — the returned frame reads it — but rounds 1..k−1's
-    // cuts, and cand/sim after the last round, are dead the moment
-    // the next round (resp. the final sel) is materialized
+    // Graph.cutWithHandle discipline, history/ADVICE.md): the final
+    // sel cut stays live — the returned frame reads it — but rounds
+    // 1..k−1's cuts, and cand/sim after the last round, are dead the
+    // moment the next round (resp. the final sel) is materialized
     var r = 2
     while (r <= k) {
       val remaining = cand.join(sel.select(col("qid"), col("id")),

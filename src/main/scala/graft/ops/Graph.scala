@@ -34,14 +34,15 @@ object Graph {
   /** Eager `localCheckpoint` plus a release handle for its pinned
     * blocks. A local checkpoint truncates lineage, so its blocks stay
     * in executor storage until the RDD is GC'd — one leaked frame per
-    * cut (ADVICE r16), and in the iterative loops here one leaked
-    * frame PER ROUND, which compounds across a long-lived session
-    * (r17 KcoreProbe: the per-round-cut peel degraded from 4.8 s to
-    * 15.4-15.8 s across three samples in one JVM as dead cuts piled
-    * up). The handle releases the blocks explicitly; calling it is
-    * safe exactly when nothing will read the frame again — a released
-    * local checkpoint cannot be recomputed by design, so the
-    * discipline is strictly release-after-supersession.
+    * cut (history/ADVICE.md), and in the iterative loops here one
+    * leaked frame PER ROUND, which compounds across a long-lived
+    * session (r17, history/kcore_probe_10x.json: the per-round-cut
+    * peel degraded from 4.8 s to 15.4-15.8 s across three samples in
+    * one JVM as dead cuts piled up). The handle releases the blocks
+    * explicitly; calling it is safe exactly when nothing will read the
+    * frame again — a released local checkpoint cannot be recomputed
+    * by design, so the discipline is strictly
+    * release-after-supersession.
     */
   private[ops] def cutWithHandle(df: DataFrame): (DataFrame, () => Unit) = {
     val cp = df.localCheckpoint()
@@ -144,7 +145,7 @@ object Graph {
         .select(col("node"),
           (lit(base) + expr("85 * cs div 100")).as("rank"))
       it += 1
-      // amortized lineage truncation (the nearDupClusters checkEvery
+      // amortized lineage truncation (the nearDupClusters span
       // discipline): checkpointing EVERY iteration materializes a job
       // per step; a short span chains lazily and pays one cut per
       // checkEvery iterations
@@ -162,7 +163,8 @@ object Graph {
     val out = if (iters == 0) ranks else cutWithHandle(ranks)._1
     // `out` is self-contained now: the loop-scoped cuts (edge list,
     // last intermediate rank cut) are dead — release them instead of
-    // pinning one frame per call for the session lifetime (ADVICE r16)
+    // pinning one frame per call for the session lifetime
+    // (history/ADVICE.md)
     releaseRanks()
     if (iters > 0) releaseE()
     eDeg.unpersist()
@@ -273,9 +275,14 @@ object Graph {
     * Rounds are data-bounded, not fixed: real graphs peel in
     * O(log n)-ish rounds; `maxIter` caps the pathological chain graph
     * (which peels one layer per round). Lineage is cut with
-    * localCheckpoint every `checkEvery` rounds — the pageRankInt
-    * discipline; without it the analyzer walks a plan that doubles
-    * per round.
+    * localCheckpoint every round — without it the analyzer walks a
+    * plan that doubles per round. Unlike pageRankInt's lazy span, the
+    * peel's convergence probe is a count() EVERY round, so an
+    * unmaterialized round would be re-executed by every later count
+    * until the next cut (a 3-round span ran rounds 1..3 three, two
+    * and one times; at 10× r17 measured a 22.1 s median for one cut
+    * per round against 87.0 s for the 3-round span,
+    * history/OPTIMIZATION_r17.md §2.4).
     *
     * @return (node, degree) for every node of the k-core, with its
     *         degree WITHIN the core (≥ k by construction when
@@ -288,22 +295,13 @@ object Graph {
       srcCol: Column,
       dstCol: Column,
       k: Int,
-      maxIter: Int = 50,
-      // 1, not the pageRankInt-style span: the peel's convergence
-      // probe is a count() EVERY round, so an unmaterialized round is
-      // re-executed by every later count until the next cut — at
-      // checkEvery=3 rounds 1..3 ran 3/2/1 times each (r16 measured
-      // the peel ~2× its necessary work); pageRankInt has no per-round
-      // action, so a lazy span is free THERE and priced HERE
-      checkEvery: Int = 1): DataFrame = {
+      maxIter: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
-    require(checkEvery >= 1, s"checkEvery must be >= 1, got $checkEvery")
     // count() below must not re-run the upstream; the handle releases
     // each cut's pinned blocks once a newer cut supersedes it (the
-    // per-round leak otherwise compounds across a session — r17
-    // KcoreProbe measured the peel degrading 4.8 → 15.8 s over three
-    // same-JVM samples before the release discipline)
+    // per-round leak otherwise compounds across a session, see
+    // [[cutWithHandle]])
     var (e, releaseE) = cutWithHandle(edges
       .select(least(srcCol, dstCol).as("u"), greatest(srcCol, dstCol).as("v"))
       .filter(col("u") =!= col("v"))
@@ -316,17 +314,13 @@ object Graph {
     var converged = n == 0L
     while (!converged && it < maxIter) {
       val keep = degrees(e).filter(col("d") >= k).select(col("x"))
-      var e2 = e
+      val (e2, rel) = cutWithHandle(e
         .join(keep.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
-        .select(col("u"), col("v"))
+        .select(col("u"), col("v")))
       it += 1
-      if (it % checkEvery == 0) {
-        val (cp, rel) = cutWithHandle(e2)
-        e2 = cp
-        releaseE() // the new cut is materialized; the old one is dead
-        releaseE = rel
-      }
+      releaseE() // the new cut is materialized; the old one is dead
+      releaseE = rel
       val n2 = e2.count()
       converged = n2 == n
       e = e2

@@ -88,7 +88,7 @@ object Stats {
     * caller that breaks it gets wrong quantiles with no failure
     * signal (duplicate rows double-count weight in the band cumsum).
     * Only the operators in this file establish that contract with
-    * their own groupBy (ADVICE r16).
+    * their own groupBy (history/ADVICE.md).
     */
   private[ops] def weightedQuantiles(
       df: DataFrame, groupCol: Column, valueCol: Column,

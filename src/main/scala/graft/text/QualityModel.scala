@@ -209,7 +209,8 @@ object QualityModel {
       // standardization stats in the same exact-decimal discipline as
       // the gradients: Σx and Σx² per feature — n rides in the SAME
       // pass (a separate count() would be one more scheduled job, and
-      // on small data the fixed job cost dominates; see PLANS_r6)
+      // on small data the fixed job cost dominates; see
+      // history/PLANS_r6.md)
       // round-then-cast (the q_lm_score discipline): a 9-dp-rounded
       // double casts to the EXACT lattice decimal on any engine; a raw
       // double→DECIMAL(28,12) cast hinges on each engine's internal

@@ -13,8 +13,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: PlanDump <query> [sfDir]")
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark: SparkSession =
-      GraftSession.builder("local[8]", 8).getOrCreate()
+    val spark: SparkSession = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.queries(args(0))(spark, dir)
     df.collect()

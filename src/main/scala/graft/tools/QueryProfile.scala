@@ -59,9 +59,7 @@ object QueryProfile {
     require(args.length >= 2, "usage: QueryProfile <sfDir> <query> [query...]")
     val dir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark: SparkSession =
-      GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark: SparkSession = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     SparkEntry.warmFixtures(spark, dir)
     // one untimed warm pass per query: codegen + page cache, the Bench

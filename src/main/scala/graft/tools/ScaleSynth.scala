@@ -53,9 +53,7 @@ object ScaleSynth {
     val Array(src, dest, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark: SparkSession =
-      GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark: SparkSession = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(dest))
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.FormattedMode
 
 import graft.ops.SnapshotDiff
 
-/** Physical-plan regression gate: the PLANS_r*.md audit claims that
+/** Physical-plan regression gate: the history/PLANS_r*.md audit claims that
   * make these queries scale — pushed filters, single-shuffle
   * aggregation, shuffle-free sampling, broadcast band join, top-k
   * without a global sort — asserted against the actual plans so a
