@@ -739,9 +739,9 @@ class IngestSpec extends SparkTestBase {
       !Seq(2L, 22L, 42L, 999L).exists(got.contains))
     assert(store.read(spark, "products", Ingest.productSchema).count() == 1)
     assert(store.read(spark, "customers", Ingest.customerSchema).count() == 1)
-    // census 1 + id assignment 4 (range sample, range shuffle, cache
-    // build, per-partition counts) + apply 2 (shuffle, write)
-    assert(append.size <= 8, s"append batch launched: $append")
+    // census 1 + write 1: the ids are numbered inside the write's task
+    // and an insert-only batch needs no window exchange
+    assert(append.size <= 2, s"append batch launched: $append")
     // census 1 + key lookup 2 (broadcast keys, one narrow scan) +
     // apply 2; no id assignment
     assert(wave.size <= 6, s"edit/remove batch launched: $wave")
@@ -810,5 +810,122 @@ class IngestSpec extends SparkTestBase {
       } finally release()
       assert((spark.sparkContext.getPersistentRDDs.keySet -- pinned).isEmpty)
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  test("census reads each batch partition once: one task per partition") {
+    val raw = (daySales("2025-05-01", 0, 12) ++ Seq(
+      ("products_add",
+        """{"product_id":11,"product_name":"Milk","product_description":"d",""" +
+          """"product_category":"Daily","product_price":2.0,"stock_level":10}"""),
+      ("customers_add",
+        """{"customer_id":7,"customer_name":"Ann","customer_location":"BKK"}"""),
+      ("customers_remove", """{"customer_id":7}"""),
+      ("transactions_sale", "not json")))
+      .zipWithIndex.map { case ((t, v), i) => (t, v, i.toLong) }
+    val batch = spark.sparkContext.parallelize(raw, 3).toDF("topic", "value", "seq")
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        tasks.add(e.stageInfos.maxBy(_.stageId).numTasks)
+    }
+    org.apache.spark.GraftCoreShims.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val shape =
+      try {
+        val shape = Ingest.census(batch)
+        org.apache.spark.GraftCoreShims.drainListenerBus(spark.sparkContext)
+        shape
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(tasks.toArray.toSeq == Seq(3),
+      s"the census is one job of one task per batch partition: $tasks")
+    assert(shape("sales") == Ingest.EntityCensus(Map("sale" -> 12L), Seq("2025-05-01")))
+    assert(shape("products") == Ingest.EntityCensus(Map("add" -> 1L), Seq("Daily")))
+    assert(shape("customers").kinds == Map("add" -> 1L, "remove" -> 1L))
+    assert(shape("customers").eventParts == Seq(null))
+  }
+
+  /** `n` sale events on one day, customers `from` onwards. */
+  private def daySales(day: String, from: Int, n: Int): Seq[(String, String)] =
+    (0 until n).map { i =>
+      ("transactions_sale", sale(f"$day 10:${i / 60}%02d:${i % 60}%02d", from + i, 100 + i % 7, 1, 2.0))
+    }
+
+  test("sale ids: one-task numbering gives the range path's ids, on a " +
+    "2,000-partition input, and launches no job of its own") {
+    val n = 3000
+    val batch = spark.range(n)
+      .select((col("id") * 7919 % n).as("seq"), lit("x").as("payload"))
+      .repartition(2000)
+    val oneTask = jobsOf {
+      Ingest.numberSaleIdsInOneTask(batch, 41L, Seq("seq"))
+    }
+    assert(oneTask.isEmpty, s"numbering launched: $oneTask")
+    val one = Ingest.numberSaleIdsInOneTask(batch, 41L, Seq("seq"))
+      .select("seq", "sale_id").as[(Long, Long)].collect()
+    val (ranged, assigned, release) = Ingest.assignSaleIds(batch, 41L, Seq("seq"))
+    val two =
+      try ranged.select("seq", "sale_id").as[(Long, Long)].collect()
+      finally release()
+    assert(assigned == n)
+    assert(one.map(_._2).sorted.toSeq == (42L to 41L + n), "dense and unique")
+    assert(one.sortBy(_._1).map(_._2).toSeq == one.map(_._2).sorted.toSeq,
+      "ids follow seq order")
+    assert(one.toMap == two.toMap)
+  }
+
+  test("five appends into one existing day: ids and rows equal the range " +
+    "path's replay, and the day keeps at most two files") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-appends")
+    val oneTask = new TableStore(s"$dir/one")
+    val ranged = new TableStore(s"$dir/ranged")
+    def batch(b: Int) = (daySales("2025-06-01", 100 * b, 40) ++
+      daySales(f"2025-06-${2 + b}%02d", 100 * b + 50, 5))
+      .zipWithIndex.map { case ((t, v), i) => (t, v, i.toLong) }
+      .toDF("topic", "value", "seq").repartition(3)
+    def rows(store: TableStore) = store.read(spark, "sales", Ingest.saleStoreSchema)
+      .as[(Long, String, Int, Int, Int, Double, Double, String, String)]
+      .collect().sortBy(_._1).toSeq
+    (0 until 5).foreach { b =>
+      Ingest.applyMicroBatch(spark, batch(b), oneTask)
+      Ingest.applyMicroBatch(spark, batch(b), ranged, saleIdsInOneTaskMax = 0L)
+      val day = oneTask.read(spark, "sales", Ingest.saleStoreSchema).inputFiles
+        .filter(_.contains("/sale_day=2025-06-01/"))
+      assert(day.length <= 2, s"append $b left ${day.length} files: ${day.toSeq}")
+      assert(rows(oneTask) == rows(ranged), s"append $b diverged")
+    }
+    val got = rows(oneTask)
+    assert(got.map(_._1) == (1L to 225L))
+    assert(oneTask.readMeta("sales").get(Ingest.maxSaleIdKey).contains("225"))
+  }
+
+  test("a batch mixing inserts, edits and removes numbers its inserts in " +
+    "one task and replays like the range path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-mixed")
+    val oneTask = new TableStore(s"$dir/one")
+    val ranged = new TableStore(s"$dir/ranged")
+    val b1 = daySales("2025-07-01", 0, 10).zipWithIndex
+      .map { case ((t, v), i) => (t, v, i.toLong) }.toDF("topic", "value", "seq")
+    val b2 = (Seq(
+      ("transactions_edit",
+        """{"sale_id":3,"sale_date":"2025-07-02 11:00:00","customer_id":7,""" +
+          """"product_id":107,"quantity":9,"price":2.0,"total_price":18.0,""" +
+          """"payment_method":"Card"}"""),
+      ("transactions_remove", """{"sale_id":4}""")) ++
+      daySales("2025-07-01", 20, 6) ++
+      Seq(("transactions_remove", """{"sale_id":12}""")))
+      .zipWithIndex.map { case ((t, v), i) => (t, v, i.toLong) }
+      .toDF("topic", "value", "seq")
+    Seq(b1, b2).foreach { b =>
+      Ingest.applyMicroBatch(spark, b, oneTask)
+      Ingest.applyMicroBatch(spark, b, ranged, saleIdsInOneTaskMax = 0L)
+    }
+    def rows(store: TableStore) = store.read(spark, "sales", Ingest.saleStoreSchema)
+      .select("sale_id", "quantity", Ingest.saleDayCol).as[(Long, Int, String)]
+      .collect().toSet
+    val got = rows(oneTask)
+    assert(got == rows(ranged))
+    assert(got.map(_._1) == ((1L to 16L).toSet - 4L - 12L),
+      "sale 12 is an insert of this batch, removed by a later event")
+    assert(got.contains((3L, 9, "2025-07-02")), "the edit moved sale 3 a day on")
   }
 }

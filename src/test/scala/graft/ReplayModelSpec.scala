@@ -111,6 +111,30 @@ class ReplayModelSpec extends SparkTestBase {
     }
   }
 
+  test("appendInserts equals applyEvents for inserts of fresh keys, over " +
+    "current tables with duplicate and null keys") {
+    val rnd = new Random(20261018L)
+    (1 to 30).foreach { round =>
+      val keys = (1 to (1 + rnd.nextInt(6))).filter(_ => rnd.nextBoolean())
+      val current = keys.flatMap { k =>
+        Seq.fill(1 + rnd.nextInt(2))(Option(k) -> s"cur$k")
+      } ++ Seq.fill(rnd.nextInt(3))(Option.empty[Int] -> "curNull")
+      // engine-assigned ids: above every current key, dense, in seq order
+      val inserts = (1 to rnd.nextInt(8)).map { i =>
+        ("sale", i.toLong, Option(6 + i), s"v$round-$i")
+      }
+      def multiset(df: org.apache.spark.sql.DataFrame) =
+        df.as[(Option[Int], String)].collect().toSeq
+          .groupMapReduce(identity)(_ => 1)(_ + _)
+      val cur = current.toDF("id", "val")
+      val evs = inserts.toDF("kind", "seq", "id", "val")
+      val got = multiset(Ingest.appendInserts(cur, evs))
+      assert(got == multiset(Ingest.applyEvents(cur, evs, "id")),
+        s"round $round diverged\n inserts=$inserts\n current=$current")
+      assert(got.values.sum == current.size + inserts.size)
+    }
+  }
+
   test("upsert invariants: key union, updates win, idempotent") {
     val rnd = new Random(7L)
     (1 to 10).foreach { _ =>
