@@ -72,10 +72,15 @@ class HourlySyncJob(
     * order. Ordering is semantic, not incidental: the customer
     * enrichment reads the **warehouse** sales table
     * (`POS_spark_dag.py:365`, `:396`), so it must observe the
-    * transactions sync that just ran. Tier thresholds and aggregation
-    * columns default to the reference's (`POS_spark_dag.py:374–383`:
-    * sum of total_price, buckets at 100/500/2000; frequency counts
-    * sale_id, `:405–406`).
+    * transactions sync that just ran.
+    *
+    * The customers variant (`POS_spark_dag.py:281–362`) enriches the
+    * fresh customer rows with membership tier and purchase frequency
+    * from that sales table in ONE pass computing sum and count fused
+    * (the reference scans sales twice over JDBC, :366 and :396), with
+    * the reference's constants: the sum of total_price, tiers at
+    * 100/500/2000 (`:374–383`), frequency counting sale_id
+    * (`:405–406`). Only the table names are deployment settings.
     */
   def runAll(
       spark: SparkSession,
@@ -84,42 +89,13 @@ class HourlySyncJob(
       freshCustomers: DataFrame,
       salesTable: String = "sales",
       productsTable: String = "products",
-      customersTable: String = "customers",
-      saleKey: String = "sale_id",
-      productKey: String = "product_id",
-      custKey: String = "customer_id",
-      amount: Column = org.apache.spark.sql.functions.col("total_price"),
-      countCol: String = "sale_id",
-      bronzeBelow: Double = 100,
-      silverBelow: Double = 500,
-      goldBelow: Double = 2000): Unit = {
-    syncTable(spark, salesTable, saleKey, freshSales)
-    syncTable(spark, productsTable, productKey, freshProducts)
+      customersTable: String = "customers"): Unit = {
+    syncTable(spark, salesTable, "sale_id", freshSales)
+    syncTable(spark, productsTable, "product_id", freshProducts)
     val warehouseSales = JdbcSource.read(spark, url, salesTable, readProps)
-    syncEnrichedCustomers(spark, customersTable, custKey, freshCustomers,
-      warehouseSales, amount, countCol, bronzeBelow, silverBelow, goldBelow)
-  }
-
-  /** The customers variant (`POS_spark_dag.py:281–362`): fresh customer
-    * rows are first enriched with membership tier and purchase
-    * frequency from the sales fact — ONE pass computing sum+count fused
-    * (the reference scans sales twice over JDBC, :366 and :396) — then
-    * synced like any other table.
-    */
-  def syncEnrichedCustomers(
-      spark: SparkSession,
-      table: String,
-      custKey: String,
-      freshCustomers: DataFrame,
-      sales: DataFrame,
-      amount: Column,
-      countCol: String,
-      bronzeBelow: Double,
-      silverBelow: Double,
-      goldBelow: Double): Unit = {
-    val enriched = PosOps.enrichCustomers(
-      freshCustomers, sales, custKey, amount, countCol,
-      bronzeBelow, silverBelow, goldBelow)
-    syncTable(spark, table, custKey, enriched)
+    syncTable(spark, customersTable, "customer_id", PosOps.enrichCustomers(
+      freshCustomers, warehouseSales, "customer_id",
+      amount = org.apache.spark.sql.functions.col("total_price"), countCol = "sale_id",
+      bronzeBelow = 100, silverBelow = 500, goldBelow = 2000))
   }
 }

@@ -17,9 +17,8 @@ import org.apache.spark.storage.StorageLevel
   *  - weighted quantiles pre-aggregate to the (group, value) domain
   *    before any window — the cumulative pass runs over distinct
   *    values, not rows;
-  *  - Gini ranks with the two-pass range-partition row number (the
-  *    assignSaleIds discipline, streaming/Ingest.scala:151) — no
-  *    single-task per-group sort, ever;
+  *  - Gini ranks with the two-pass range-partition row number
+  *    ([[Stats.globalRowNumber]]) — no single-task per-group sort, ever;
   *  - Benford is one map-side digit histogram (<= 9 output rows);
   *  - ACF / CUSUM reduce the fact table to a calendar-bounded daily
   *    series FIRST (the ops/Anomaly precedent), then run the
@@ -394,9 +393,10 @@ object Stats {
     * single-task global (or per-group) sort, and exactly ONE
     * full-data exchange: range-repartition on the order key, a
     * per-partition record counter, add per-partition offsets (one
-    * #partitions-sized driver array; the streaming/Ingest.scala:151
-    * discipline, generalized). The order key must be unique per row
-    * or ranks are nondeterministic across runs; a single range
+    * #partitions-sized driver array, read by one flat `element_at`, so
+    * codegen stays flat at production partition counts like 2000).
+    * The order key must be unique per row or ranks are
+    * nondeterministic across runs; a single range
     * partition must stay under 2^33 rows (the counter's bit budget —
     * ~8.6e9 rows/partition, far above any sane partition sizing).
     *

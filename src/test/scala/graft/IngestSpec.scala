@@ -5,8 +5,8 @@ import graft.streaming.{Ingest, TableStore}
 
 /** Streaming-ingest semantics (EP3), tested in batch form: the event
   * sequences of FIXTURES.md §A4 — insert→edit→remove, same-key
-  * collisions, edit-on-missing-key — plus the distributed sale-id
-  * assignment and the full micro-batch → TableStore path.
+  * collisions, edit-on-missing-key — plus the sale-id numbering and
+  * the full micro-batch → TableStore path.
   */
 class IngestSpec extends SparkTestBase {
   import spark.implicits._
@@ -48,25 +48,6 @@ class IngestSpec extends SparkTestBase {
     val got = Ingest.applyEvents(current, events(("remove", 1L, 9, "")), "id")
       .as[(Int, String)].collect().toSet
     assert(got == Set(1 -> "a"))
-  }
-
-  test("assignSaleIds: dense unique ids in key order across partitions") {
-    val n = 1000
-    val batch = spark.range(n)
-      .select((col("id") * 37 % n).as("k"), lit("x").as("payload"))
-      .repartition(8)
-    val pinned = spark.sparkContext.getPersistentRDDs.keySet
-    val (df, assigned, release) = Ingest.assignSaleIds(batch, 500L, Seq("k"))
-    val got =
-      try df.select("k", "sale_id").as[(Long, Long)].collect()
-      finally release()
-    assert(assigned == n)
-    val ids = got.map(_._2).sorted
-    assert(ids.toSeq == (501L to 500L + n), "ids must be dense and unique")
-    // id order must follow key order
-    assert(got.sortBy(_._1).map(_._2).toSeq == got.map(_._2).sorted.toSeq)
-    // the release handle drops the cache the assignment pinned
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- pinned).isEmpty)
   }
 
   test("parseEntity drops corrupt JSON instead of emitting null-keyed rows") {
@@ -577,27 +558,24 @@ class IngestSpec extends SparkTestBase {
       s"only in-range partition files may be planned: ${files.toSeq}")
   }
 
-  test("legacy unpartitioned sales store (no sale_day column) migrates to " +
-    "the partitioned layout on its first new-code batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-migrate")
+  test("an unpartitioned sales store (no sale_day column) is refused: " +
+    "the batch throws and the store keeps its version") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-unpartitioned")
     val store = new TableStore(s"$dir/store")
-    // round-2-era layout: plain overwrite, saleSchema columns only
-    val legacy = Seq(
+    // a plain overwrite with saleSchema columns only: no manifest, no day
+    val rows = Seq(
       (5L, "2025-01-01 09:00:00", 1, 101, 1, 2.0, 2.0, "Cash"),
       (6L, "2025-01-02 09:00:00", 2, 102, 1, 3.0, 3.0, "Card"))
       .toDF(Ingest.saleSchema.fieldNames: _*)
-    store.overwrite("sales", legacy)
+    store.overwrite("sales", rows)
+    val before = store.currentVersion("sales")
     val b = Seq(
       ("transactions_sale", sale("2025-01-02 10:00:00", 3, 103, 1, 4.0), 0L))
       .toDF("topic", "value", "seq")
-    Ingest.applyMicroBatch(spark, b, store)
-    val got = store.read(spark, "sales", Ingest.saleStoreSchema)
-    assert(got.select("sale_id").as[Long].collect().sorted.toSeq ==
-      Seq(5L, 6L, 7L), "legacy rows survive; new id continues from max")
-    assert(got.filter(col(Ingest.saleDayCol) === "2025-01-01").count() == 1,
-      "migrated rows carry the derived day partition")
-    assert(store.partitionValues("sales").sorted ==
-      Seq("2025-01-01", "2025-01-02"))
+    intercept[Exception](Ingest.applyMicroBatch(spark, b, store))
+    assert(store.currentVersion("sales") == before)
+    assert(store.read(spark, "sales", Ingest.saleSchema)
+      .select("sale_id").as[Long].collect().sorted.toSeq == Seq(5L, 6L))
   }
 
   test("TableStore retirement grace: a reader planned before one overwrite " +
@@ -796,22 +774,6 @@ class IngestSpec extends SparkTestBase {
     assert(scans.size == 1, s"one scan per snapshot:\n${full.queryExecution.executedPlan}")
   }
 
-  test("assignSaleIds stays flat at production partition counts (2000)") {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2000")
-    try {
-      val batch = spark.range(500)
-        .select(col("id").as("k"), lit("x").as("payload"))
-      val pinned = spark.sparkContext.getPersistentRDDs.keySet
-      val (got, _, release) = Ingest.assignSaleIds(batch, 0L, Seq("k"))
-      try {
-        val ids = got.select("sale_id").as[Long].collect().sorted
-        assert(ids.toSeq == (1L to 500L))
-      } finally release()
-      assert((spark.sparkContext.getPersistentRDDs.keySet -- pinned).isEmpty)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   test("census reads each batch partition once: one task per partition") {
     val raw = (daySales("2025-05-01", 0, 12) ++ Seq(
       ("products_add",
@@ -862,47 +824,56 @@ class IngestSpec extends SparkTestBase {
     assert(oneTask.isEmpty, s"numbering launched: $oneTask")
     val one = Ingest.numberSaleIdsInOneTask(batch, 41L, Seq("seq"))
       .select("seq", "sale_id").as[(Long, Long)].collect()
-    val (ranged, assigned, release) = Ingest.assignSaleIds(batch, 41L, Seq("seq"))
-    val two =
-      try ranged.select("seq", "sale_id").as[(Long, Long)].collect()
-      finally release()
-    assert(assigned == n)
     assert(one.map(_._2).sorted.toSeq == (42L to 41L + n), "dense and unique")
     assert(one.sortBy(_._1).map(_._2).toSeq == one.map(_._2).sorted.toSeq,
       "ids follow seq order")
-    assert(one.toMap == two.toMap)
+    // the distributed range-partition row number over 2,000 shuffle
+    // partitions ranks the same rows the same way
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2000")
+    val ranged =
+      try {
+        val (ranked, release) =
+          graft.ops.Stats.globalRowNumber(batch, Seq(col("seq")), "rn")
+        try ranked.select(col("seq"), col("rn") + 41L).as[(Long, Long)].collect()
+        finally release()
+      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert(one.toMap == ranged.toMap)
   }
 
-  test("five appends into one existing day: ids and rows equal the range " +
-    "path's replay, and the day keeps at most two files") {
+  test("five appends into one existing day: ids follow arrival order, rows " +
+    "land on their days, and the day keeps at most two files") {
     val dir = java.nio.file.Files.createTempDirectory("graft-appends")
-    val oneTask = new TableStore(s"$dir/one")
-    val ranged = new TableStore(s"$dir/ranged")
+    val store = new TableStore(s"$dir/store")
     def batch(b: Int) = (daySales("2025-06-01", 100 * b, 40) ++
       daySales(f"2025-06-${2 + b}%02d", 100 * b + 50, 5))
       .zipWithIndex.map { case ((t, v), i) => (t, v, i.toLong) }
       .toDF("topic", "value", "seq").repartition(3)
-    def rows(store: TableStore) = store.read(spark, "sales", Ingest.saleStoreSchema)
-      .as[(Long, String, Int, Int, Int, Double, Double, String, String)]
-      .collect().sortBy(_._1).toSeq
+    // (sale_id, sale_date, customer_id, product_id, sale_day) of batch b:
+    // its 45 sales take the next 45 ids in seq order
+    def expected(b: Int) = (0 until 45).map { i =>
+      val (day, cust, j) =
+        if (i < 40) ("2025-06-01", 100 * b + i, i)
+        else (f"2025-06-${2 + b}%02d", 100 * b + 50 + i - 40, i - 40)
+      (45L * b + i + 1, f"$day 10:00:$j%02d", cust, 100 + j % 7, day)
+    }
+    def rows = store.read(spark, "sales", Ingest.saleStoreSchema)
+      .select("sale_id", "sale_date", "customer_id", "product_id", Ingest.saleDayCol)
+      .as[(Long, String, Int, Int, String)].collect().sortBy(_._1).toSeq
     (0 until 5).foreach { b =>
-      Ingest.applyMicroBatch(spark, batch(b), oneTask)
-      Ingest.applyMicroBatch(spark, batch(b), ranged, saleIdsInOneTaskMax = 0L)
-      val day = oneTask.read(spark, "sales", Ingest.saleStoreSchema).inputFiles
+      Ingest.applyMicroBatch(spark, batch(b), store)
+      val day = store.read(spark, "sales", Ingest.saleStoreSchema).inputFiles
         .filter(_.contains("/sale_day=2025-06-01/"))
       assert(day.length <= 2, s"append $b left ${day.length} files: ${day.toSeq}")
-      assert(rows(oneTask) == rows(ranged), s"append $b diverged")
+      assert(rows == (0 to b).flatMap(expected), s"append $b diverged")
     }
-    val got = rows(oneTask)
-    assert(got.map(_._1) == (1L to 225L))
-    assert(oneTask.readMeta("sales").get(Ingest.maxSaleIdKey).contains("225"))
+    assert(store.readMeta("sales").get(Ingest.maxSaleIdKey).contains("225"))
   }
 
   test("a batch mixing inserts, edits and removes numbers its inserts in " +
-    "one task and replays like the range path") {
+    "one task and replays every event in seq order") {
     val dir = java.nio.file.Files.createTempDirectory("graft-mixed")
-    val oneTask = new TableStore(s"$dir/one")
-    val ranged = new TableStore(s"$dir/ranged")
+    val store = new TableStore(s"$dir/store")
     val b1 = daySales("2025-07-01", 0, 10).zipWithIndex
       .map { case ((t, v), i) => (t, v, i.toLong) }.toDF("topic", "value", "seq")
     val b2 = (Seq(
@@ -915,17 +886,42 @@ class IngestSpec extends SparkTestBase {
       Seq(("transactions_remove", """{"sale_id":12}""")))
       .zipWithIndex.map { case ((t, v), i) => (t, v, i.toLong) }
       .toDF("topic", "value", "seq")
-    Seq(b1, b2).foreach { b =>
-      Ingest.applyMicroBatch(spark, b, oneTask)
-      Ingest.applyMicroBatch(spark, b, ranged, saleIdsInOneTaskMax = 0L)
-    }
-    def rows(store: TableStore) = store.read(spark, "sales", Ingest.saleStoreSchema)
-      .select("sale_id", "quantity", Ingest.saleDayCol).as[(Long, Int, String)]
-      .collect().toSet
-    val got = rows(oneTask)
-    assert(got == rows(ranged))
-    assert(got.map(_._1) == ((1L to 16L).toSet - 4L - 12L),
-      "sale 12 is an insert of this batch, removed by a later event")
-    assert(got.contains((3L, 9, "2025-07-02")), "the edit moved sale 3 a day on")
+    Seq(b1, b2).foreach(Ingest.applyMicroBatch(spark, _, store))
+    val got = store.read(spark, "sales", Ingest.saleStoreSchema)
+      .select("sale_id", "customer_id", "quantity", Ingest.saleDayCol)
+      .as[(Long, Int, Int, String)].collect().toSet
+    // b1's sales are ids 1..10 (customers 0..9); b2's six inserts are
+    // ids 11..16 (customers 20..25), and sale 12 is removed by a later
+    // event of its own batch; the edit moves sale 3 a day on
+    val kept = ((1L to 10L) ++ (11L to 16L)).filterNot(Set(3L, 4L, 12L))
+    assert(got == kept.map { id =>
+      (id, if (id <= 10) id.toInt - 1 else id.toInt + 9, 1, "2025-07-01")
+    }.toSet + ((3L, 7, 9, "2025-07-02")))
+  }
+
+  test("an insert-only batch of 200,001 sales, above any one-task bound, is " +
+    "applied in two jobs with ids dense in seq order") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bigappend")
+    val store = new TableStore(s"$dir/store")
+    val n = 200001L
+    // a permutation of 0 until n, so arrival order is not row order
+    val seq = col("id") * 7919 % n
+    val batch = spark.range(n).select(
+      lit("transactions_sale").as("topic"),
+      to_json(struct(
+        concat(lit("2025-08-0"), (seq % 3 + 1).cast("string"), lit(" 10:00:00"))
+          .as("sale_date"),
+        seq.cast("int").as("customer_id"), lit(101).as("product_id"),
+        lit(1).as("quantity"), lit(2.0).as("price"), lit(2.0).as("total_price"),
+        lit("Cash").as("payment_method"))).as("value"),
+      seq.as("seq"))
+    val jobs = jobsOf(Ingest.applyMicroBatch(spark, batch, store))
+    assert(jobs.size <= 2, s"append batch launched: $jobs")
+    // customer_id carries the event's seq, a permutation of 0 until n:
+    // the ids are 1..n in seq order iff every sale_id is its seq + 1
+    val got = store.read(spark, "sales", Ingest.saleStoreSchema)
+    assert(got.count() == n)
+    assert(got.filter(col("sale_id") =!= col("customer_id") + 1).isEmpty)
+    assert(store.readMeta("sales").get(Ingest.maxSaleIdKey).contains("200001"))
   }
 }
