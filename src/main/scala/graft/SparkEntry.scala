@@ -6049,10 +6049,10 @@ object SparkEntry {
     //      third stage: retrieve → fuse → diversify): greedy λ=0.7
     //      selection of 5 per query, each round trading relevance
     //      against max cosine redundancy with what's already chosen —
-    //      bounded candidate sets by contract, k unrolled rounds,
-    //      every argmax (score desc, id asc)-deterministic, replayed
-    //      end to end by OracleMmr ----
-    // MMR greedy selection unrolled round by round (OracleMmr),
+    //      bounded candidate sets by contract, one per-query greedy
+    //      pass, every argmax (score desc, id asc)-deterministic,
+    //      replayed end to end by OracleMmr ----
+    // the oracle unrolls the greedy round by round (OracleMmr), with
     // candidates sourced from the embedded hybrid-search replay
     QueryDef("q_mmr_rerank", OracleMmr.mmrSql(hybridSearchSql, 0.7, 5)) { (s, d) =>
       val emb = t("embeddings")(s, d)

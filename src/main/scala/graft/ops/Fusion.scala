@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
 /** Rank fusion across retrieval systems — the hybrid-search join of a
   * RAG stack: lexical (BM25) and dense (ANN) retrievers each produce
@@ -87,30 +88,36 @@ object Fusion {
     * `λ·rel − (1−λ)·max_{s ∈ selected} sim(cand, s)` — relevance
     * traded against redundancy with what is already chosen.
     *
-    * Engine-exactness: candidate-pair cosines snap to the 4-dp
-    * lattice (the KNN discipline), the MMR expression is one fixed
-    * sequence of correctly-rounded IEEE ops over lattice inputs
-    * rounded to 9 dp (the abTest precedent), and every argmax breaks
-    * ties on (score desc, id asc) — so all `k` unrolled selection
-    * rounds replay in DuckDB to hash equality (OracleMmr).
+    * The greedy is sequential per query, so it runs as one pass: the
+    * candidates, left-joined to their vectors, are gathered into one
+    * group per `qid` (one exchange), and the executor runs the `k`
+    * rounds over the group: take the argmax, then fold the winner's
+    * cosine into each remaining candidate's running max similarity.
+    * Building the frame launches no job and pins nothing.
     *
-    * Scale: candidates are a bounded top-k per query BY CONTRACT
-    * (the output of [[reciprocalRankFusion]] or any retriever), so
-    * the pairwise sim table is ≤ topK² rows per query and each of
-    * the `k` rounds is one join + one bounded-heap argmax — all
-    * distributed per query, nothing driver-side, no dependence on
-    * corpus size. Every round CUTS its lineage with `localCheckpoint`
-    * (the pageRankInt discipline): round r references round r−1 three
-    * times (remaining + max-sim + union), so an uncut logical plan —
-    * even a fully persisted one — grows 3^k references to the
-    * candidate source and drowns the ANALYZER long before execution
-    * (measured: 60 s of pure planning at k=5 over 30 rows).
+    * Engine-exactness: a cosine is the [[graft.similarity.Knn.dot]]
+    * fold over the two norms snapped to the 4-dp lattice (the KNN
+    * discipline), the MMR expression is one fixed sequence of
+    * correctly-rounded IEEE ops rounded to 9 dp (the abTest
+    * precedent), each rounding is Spark's `round` of a double
+    * (`BigDecimal.valueOf(x).setScale(s, HALF_UP)`), round 1 ranks on
+    * raw `rel`, and every argmax breaks ties on (score desc, id asc)
+    * — so all `k` rounds replay in DuckDB to hash equality (OracleMmr).
     *
-    * @param candidates (qid, id, rel) — rel on the 9-dp lattice
-    * @param vectors    (id, vector) — zero-norm/missing vectors
-    *                   contribute similarity 0 (never NaN)
+    * Scale: candidates are a bounded top-N per query BY CONTRACT (the
+    * output of [[reciprocalRankFusion]] or any retriever), so a
+    * query's group holds N candidates and their vectors: O(N·d)
+    * memory and O(k·N·d) work in one task, nothing driver-side.
+    *
+    * @param candidates (qid, id, rel) — unique per (qid, id), as RRF
+    *                   emits them; id numeric and non-null, rel on
+    *                   the 9-dp lattice
+    * @param vectors    (id, vector), unique per id — a missing or
+    *                   zero-norm vector has no similarity to anything:
+    *                   such a candidate's max similarity stays 0, and
+    *                   once selected it adds nothing to the others' max
     * @param lambda     relevance weight in [0, 1]
-    * @param k          results per query
+    * @param k          results per query (all candidates when fewer)
     * @return (qid, rank, id, mmr_score) — mmr_score is the value at
     *         selection time (round 1: λ·rel)
     */
@@ -123,68 +130,58 @@ object Fusion {
     require(k > 0, s"k must be positive, got $k")
     require(candidates.schema("id").dataType
         .isInstanceOf[org.apache.spark.sql.types.NumericType],
-      "candidate id must be numeric (tie-break negation), got " +
+      "candidate id must be numeric (tie-break order), got " +
         candidates.schema("id").dataType.simpleString)
-    import graft.similarity.Knn.{dot, norm}
     val mu = 1.0 - lambda // the exact IEEE complement — mirrored by
     // the oracle, which inlines THIS double, not a re-typed "0.3"
-    val (cand, releaseCand) = Graph.cutWithHandle(candidates
-      .select(col("qid"), col("id"), col("rel").cast("double").as("rel")))
+    def sparkRound(x: Double, scale: Int): Double =
+      if (x.isNaN || x.isInfinite) x
+      else java.math.BigDecimal.valueOf(x)
+        .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue
     val v = vectors
       .select(col("id"), col("vector").cast("array<double>").as("v"))
-      .withColumn("n", norm(col("v"))).filter(col("n") > 0)
-    val simRaw = cand.select(col("qid"), col("id").as("i"))
-      .join(cand.select(col("qid"), col("id").as("j")), Seq("qid"))
-      .filter(col("i") =!= col("j"))
-      .join(v.select(col("id").as("i"), col("v").as("vi"),
-        col("n").as("ni")), Seq("i"))
-      .join(v.select(col("id").as("j"), col("v").as("vj"),
-        col("n").as("nj")), Seq("j"))
-      .select(col("qid"), col("i"), col("j"),
-        round(dot(col("vi"), col("vj")) / (col("ni") * col("nj")), 4)
-          .as("s"))
-    val (sim, releaseSim) = Graph.cutWithHandle(simRaw)
-    // round 1: pure relevance argmax
-    var (sel, releaseSel) = Graph.cutWithHandle(TopK.topKPerGroup(
-        cand.withColumn("neg_id", -col("id")),
-        Seq("qid"), struct(col("rel"), col("neg_id"), col("id")),
-        1, largest = true)
-      .select(col("qid"), col("id"),
-        round(lit(lambda) * col("rel"), 9).as("mmr_score"))
-      .withColumn("rank", lit(1)))
-    // superseded per-round cuts release their pinned blocks (the
-    // Graph.cutWithHandle discipline, history/ADVICE.md): the final
-    // sel cut stays live — the returned frame reads it — but rounds
-    // 1..k−1's cuts, and cand/sim after the last round, are dead the
-    // moment the next round (resp. the final sel) is materialized
-    var r = 2
-    while (r <= k) {
-      val remaining = cand.join(sel.select(col("qid"), col("id")),
-        Seq("qid", "id"), "left_anti")
-      val maxSim = sim
-        .join(sel.select(col("qid"), col("id").as("j")), Seq("qid", "j"))
-        .groupBy(col("qid"), col("i")).agg(max(col("s")).as("ms"))
-        .withColumnRenamed("i", "id")
-      val scored = remaining.join(maxSim, Seq("qid", "id"), "left")
-        .withColumn("mmr", round(
-          lit(lambda) * col("rel") -
-            lit(mu) * coalesce(col("ms"), lit(0.0)), 9))
-      val winner = TopK.topKPerGroup(
-          scored.withColumn("neg_id", -col("id")),
-          Seq("qid"), struct(col("mmr"), col("neg_id"), col("id")),
-          1, largest = true)
-        .select(col("qid"), col("id"), col("mmr").as("mmr_score"))
-        .withColumn("rank", lit(r))
-      val (cp, rel) = Graph.cutWithHandle(sel.unionByName(winner))
-      sel = cp
-      releaseSel()
-      releaseSel = rel
-      r += 1
-    }
-    // the final sel cut is a self-contained leaf: the loop inputs'
-    // pinned blocks are dead now
-    releaseCand()
-    releaseSim()
-    sel.select(col("qid"), col("rank"), col("id"), col("mmr_score"))
+      .withColumn("n", graft.similarity.Knn.norm(col("v")))
+      .filter(col("n") > 0)
+    val rows = candidates
+      .select(col("qid"), col("id"), col("rel").cast("double").as("rel"))
+      .join(v, Seq("id"), "left")
+      .select(col("qid"), col("id"), col("rel"), col("v"), col("n"))
+    val out = StructType(Seq(rows.schema("qid"),
+      StructField("rank", IntegerType, nullable = false), rows.schema("id"),
+      StructField("mmr_score", DoubleType, nullable = false)))
+    rows.groupBy(col("qid"))
+      .as[Row, Row](Encoders.row(StructType(Seq(rows.schema("qid")))),
+        Encoders.row(rows.schema))
+      .flatMapGroups { (key: Row, group: Iterator[Row]) =>
+        // id asc, so the scan's strict `>` keeps the smallest id on a tie
+        val cs = group.toArray.sortWith((a, b) =>
+          a.get(1).asInstanceOf[Comparable[Any]].compareTo(b.get(1)) < 0)
+        val rel = cs.map(_.getDouble(2))
+        val vec = cs.map(r => if (r.isNullAt(3)) null else r.getSeq[Double](3).toArray)
+        // max similarity to the selected rows that have a vector pair
+        // with the candidate, 0 while there is none
+        val ms = new Array[Double](cs.length)
+        val hasMs, taken = new Array[Boolean](cs.length)
+        (1 to math.min(k, cs.length)).map { rank =>
+          var best = -1
+          var bestScore = 0.0
+          for (c <- cs.indices if !taken(c)) {
+            val s =
+              if (rank == 1) rel(c) else sparkRound(lambda * rel(c) - mu * ms(c), 9)
+            if (best < 0 || s > bestScore) { best = c; bestScore = s }
+          }
+          taken(best) = true
+          for (c <- cs.indices if !taken(c) && vec(c) != null && vec(best) != null) {
+            val (x, y) = (vec(c), vec(best))
+            var d = 0.0
+            for (i <- 0 until math.min(x.length, y.length)) d += x(i) * y(i)
+            val s = sparkRound(d / (cs(c).getDouble(4) * cs(best).getDouble(4)), 4)
+            ms(c) = if (hasMs(c)) math.max(ms(c), s) else s
+            hasMs(c) = true
+          }
+          Row(key.get(0), rank, cs(best).get(1),
+            if (rank == 1) sparkRound(lambda * rel(best), 9) else bestScore)
+        }
+      }(Encoders.row(out))
   }
 }

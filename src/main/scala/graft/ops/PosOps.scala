@@ -134,15 +134,6 @@ object PosOps {
       base.select(updates.columns.map(col).toIndexedSeq: _*)
         .join(updates, Seq(key), "left_anti"))
 
-  /** Full sync semantics (M3, `POS_spark_dag.py:124–201`): the table
-    * becomes exactly the fresh extract — deletes everything absent,
-    * upserts everything present. As a relational value that is just
-    * `fresh`; the operational form (against a JDBC warehouse) is
-    * delete([[deleteSet]]) + upsert(fresh) — see
-    * [[graft.sinks.JdbcUpsertSink]].
-    */
-  def syncResult(fresh: DataFrame): DataFrame = fresh
-
   /** Category routing — first digit of the product key names the
     * category partition (reference `kafka_consumer.py:41–49, 111–112`;
     * `kafka_producer.py:69–79`).

@@ -465,13 +465,18 @@ object Ingest {
         // id counter from snapshot meta; the column scan (and even
         // planning the snapshot relation) is only the bootstrap
         // fallback for stores created before the counter, and a new
-        // table starts at 0 with no job
+        // table starts at 0 with no job. The scan reads the day
+        // column, so the layout is checked first: a store without it
+        // is refused for its layout, not for an unresolved column
         val maxId = store.readMeta("sales").get(maxSaleIdKey)
           .map(_.toLong).getOrElse(
             if (store.currentVersion("sales").isEmpty) 0L
-            else store.read(spark, "sales", saleStoreSchema)
-              .agg(coalesce(max(col("sale_id")), lit(0L)))
-              .head().getLong(0))
+            else {
+              store.requirePartitionedBy("sales", saleDayCol)
+              store.read(spark, "sales", saleStoreSchema)
+                .agg(coalesce(max(col("sale_id")), lit(0L)))
+                .head().getLong(0)
+            })
         // ids in arrival order (seq), the reference's consumption-order
         // counter semantics (kafka_consumer.py:74–109)
         val n = c.kinds.getOrElse("sale", 0L)

@@ -333,6 +333,21 @@ class TableStore(root: String, keepVersions: Int = 2) {
     }
   }
 
+  /** The current manifest of `name`, after checking that the table is
+    * absent or partitioned by `partCol`: the layout a partition-scoped
+    * read or write of it assumes.
+    */
+  private[streaming] def requirePartitionedBy(
+      name: String, partCol: String): Option[Manifest] = {
+    val cur = currentVersion(name)
+    val old = cur.flatMap(readManifest(name, _))
+    old.foreach(m => require(m.partCol == partCol,
+      s"table $name is partitioned by ${m.partCol}, not $partCol"))
+    require(cur.isEmpty || old.nonEmpty,
+      s"table $name exists unpartitioned; cannot write partition-scoped")
+    old
+  }
+
   /** Incremental rewrite of a partitioned table: `df` holds the new
     * full contents of exactly the partitions in `touched` (a partition
     * emptied by deletes simply drops out of the snapshot); every other
@@ -347,12 +362,7 @@ class TableStore(root: String, keepVersions: Int = 2) {
       touched: Seq[String],
       sortBy: Seq[String] = Nil,
       meta: Map[String, String] = Map.empty): Unit = {
-    val cur = currentVersion(name)
-    val old = cur.flatMap(readManifest(name, _))
-    old.foreach(m => require(m.partCol == partCol,
-      s"table $name is partitioned by ${m.partCol}, not $partCol"))
-    require(cur.isEmpty || old.nonEmpty,
-      s"table $name exists unpartitioned; cannot write partition-scoped")
+    val old = requirePartitionedBy(name, partCol)
     val staged = writeStaged(name, df, sortBy, Seq(partCol))
     val touchedDirs = touched.map(partitionDirName(partCol, _)).toSet
     publish(name, staged, meta, expectVersion = None) { (next, written) =>

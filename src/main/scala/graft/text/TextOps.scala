@@ -614,11 +614,6 @@ object TextOps {
   def winnowFingerprints(text: Column, k: Int = 25, w: Int = 50): Column =
     graft.functions.GraftFunctions.winnow(text, k, w)
 
-  /** 64-bit rolling-hash-style fingerprint via xxhash64 (engine-local;
-    * no cross-engine oracle — used by SimHash/MinHash pipelines).
-    */
-  def fingerprint64(text: Column): Column = xxhash64(text)
-
   /** Corpus card — the "datasheet for a dataset" one-call summary
     * (Gebru et al. 2021 motivation, counting form): corpus size,
     * source fan-out, token/char volume, exact-duplicate mass, empty

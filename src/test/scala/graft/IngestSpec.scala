@@ -572,7 +572,8 @@ class IngestSpec extends SparkTestBase {
     val b = Seq(
       ("transactions_sale", sale("2025-01-02 10:00:00", 3, 103, 1, 4.0), 0L))
       .toDF("topic", "value", "seq")
-    intercept[Exception](Ingest.applyMicroBatch(spark, b, store))
+    val e = intercept[Exception](Ingest.applyMicroBatch(spark, b, store))
+    assert(e.getMessage.contains("exists unpartitioned"), e.getMessage)
     assert(store.currentVersion("sales") == before)
     assert(store.read(spark, "sales", Ingest.saleSchema)
       .select("sale_id").as[Long].collect().sorted.toSeq == Seq(5L, 6L))
