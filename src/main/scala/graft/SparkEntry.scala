@@ -33,8 +33,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_membership_level")(spark, "/root/testdata/sf0.001")
 
-  private def t(name: String)(s: SparkSession, dir: String): DataFrame =
-    if (name == "events") Tables.events(s, dir) else Tables.load(s, dir, name)
+  private def t(name: String): (SparkSession, String) => DataFrame =
+    Tables.loaders(name)
 
   /** Shared probe/build sides for the two as-of queries. The right side
     * is pre-aggregated to one row per (user, ts) so timestamp ties have

@@ -208,10 +208,7 @@ object Dedup {
     // persist so the text is shingled once. Verification intersects
     // hash sets — equal to the string-set intersection up to 64-bit
     // collisions (P ≈ n²·2⁻⁶⁴).
-    val sh = docs.select(
-      col(idCol).as("doc_id"),
-      shingleHashes(col(textCol), shingleLen).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = shingleTable(docs, idCol, textCol, shingleLen)
     val signed = sh.select(
       col("doc_id"),
       graft.functions.GraftFunctions.minhashSignature(col("sh"), numHashes)
@@ -253,10 +250,7 @@ object Dedup {
     // 8-byte hash instead of the string is ~3× less shuffle payload; a
     // cross-doc 64-bit collision (P ≈ n²·2⁻⁶⁴) is the same tolerance
     // every hash-join engine accepts
-    val sh = docs.select(
-      col(idCol).as("doc_id"),
-      shingleHashes(col(textCol), shingleLen).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = shingleTable(docs, idCol, textCol, shingleLen)
     val sizes = sh.select(col("doc_id"), size(col("sh")).as("n_sh"))
     val expl = sh.select(col("doc_id"), explode(col("sh")).as("s"))
     val common = expl.as("x").join(expl.as("y"),
@@ -296,10 +290,7 @@ object Dedup {
       textCol: String,
       shingleLen: Int = 3,
       threshold: Double = 0.8): DataFrame = {
-    val sh = docs.select(
-      col(idCol).as("doc_id"),
-      shingleHashes(col(textCol), shingleLen).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = shingleTable(docs, idCol, textCol, shingleLen)
     val sizes = sh.select(col("doc_id"), size(col("sh")).as("n_sh"))
     val expl = sh.select(col("doc_id"), explode(col("sh")).as("s"))
     val common = expl.as("x").join(expl.as("y"),
@@ -569,6 +560,20 @@ object Dedup {
       .select("doc_a", "doc_b", "hamming")
   }
 
+  /** The `(doc_id, sh)` shingle-hash table, persisted MEMORY_AND_DISK:
+    * every exact and verified near-dup path reads it more than once
+    * (sizes, self-join or prefix sides, verification), so the text is
+    * shingled once. The paths that checkpoint their pair table
+    * unpersist it before they return; the lazy ones leave it to the
+    * caller or session (`clearCache`).
+    */
+  private def shingleTable(docs: DataFrame, idCol: String, textCol: String,
+      shingleLen: Int): DataFrame =
+    docs.select(
+      col(idCol).as("doc_id"),
+      shingleHashes(col(textCol), shingleLen).as("sh"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
   /** Estimated in-memory size of a `(doc_id, sh: array<long>)` frame
     * as a broadcast hash relation: 8 B per shingle hash plus ~48 B of
     * per-row fixed cost (UnsafeRow header + array header + the
@@ -580,6 +585,42 @@ object Dedup {
     val st = sh.agg(count(lit(1)).as("n"),
       coalesce(sum(size(col("sh"))), lit(0L)).as("tot")).head()
     st.getLong(1) * 8L + st.getLong(0) * 48L
+  }
+
+  /** Each document's shingles in the canonical rarest-first order
+    * (global document frequency, then hash — `(df, s)` sorts
+    * deterministically), from an exploded `(doc_id, s)` table:
+    * `(doc_id, osh)`. Both prefix filters order by it.
+    */
+  private def rarestFirst(expl: DataFrame): DataFrame = {
+    val freq = expl.groupBy(col("s")).agg(count(lit(1)).as("df"))
+    expl.join(freq, Seq("s"))
+      .groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("fs"))
+      .select(col("doc_id"),
+        transform(col("fs"), f => f.getField("s")).as("osh"))
+  }
+
+  /** `(doc_id, n, p, s)` per element of `arr` (an array over `osh`):
+    * `n` = |osh|, and `p` the element's 1-based position in the global
+    * rarest-first order — the PPJoin positional filter's input.
+    */
+  private def positions(ordered: DataFrame, arr: Column): DataFrame =
+    ordered.select(col("doc_id"), size(col("osh")).as("n"), posexplode(arr))
+      .select(col("doc_id"), col("n"), (col("pos") + 1).as("p"),
+        col("col").as("s"))
+
+  /** The positions of each document's prefix: its first
+    * |x| − ⌈t·|x|⌉ + 1 rarest-first shingles (at least one). The
+    * ε-guarded ceil means rounding may only LENGTHEN the prefix (more
+    * candidates), never shorten it (missed pairs).
+    */
+  private def prefixPositions(ordered: DataFrame, threshold: Double)
+      : DataFrame = {
+    val prefLen = greatest(lit(1),
+      size(col("osh")) -
+        ceil(size(col("osh")) * lit(threshold) - lit(1e-9)).cast("int") + 1)
+    positions(ordered, slice(col("osh"), lit(1), prefLen))
   }
 
   /** Exact n-gram Jaccard pairs via PREFIX FILTERING (AllPairs/PPJoin,
@@ -605,10 +646,7 @@ object Dedup {
       shingleLen: Int = 3,
       threshold: Double = 0.8,
       broadcastVerifyMaxBytes: Long = 2L << 30): DataFrame = {
-    val sh = docs.select(
-      col(idCol).as("doc_id"),
-      shingleHashes(col(textCol), shingleLen).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = shingleTable(docs, idCol, textCol, shingleLen)
     // same guarded verify strategy as [[ngramContainmentPairsPrefix]]
     // (see the measured head-to-head there): under the BYTE cap the
     // per-doc array table broadcasts and candidates stream through
@@ -619,24 +657,7 @@ object Dedup {
     val broadcastVerify =
       shingleTableBytes(sh) <= broadcastVerifyMaxBytes
     val expl = sh.select(col("doc_id"), explode(col("sh")).as("s"))
-    val freq = expl.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    // canonical rarest-first order; (df, s) sorts deterministically
-    val ordered = expl.join(freq, Seq("s"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("fs"))
-      .select(col("doc_id"),
-        transform(col("fs"), f => f.getField("s")).as("osh"))
-    val prefLen = greatest(lit(1),
-      size(col("osh")) -
-        ceil(size(col("osh")) * lit(threshold) - lit(1e-9)).cast("int") + 1)
-    // 1-based position in the global rarest-first order rides along —
-    // the PPJoin positional filter's input (the containment twin's
-    // machinery, symmetric form)
-    val pref = ordered.select(col("doc_id"),
-        size(col("osh")).as("n"),
-        posexplode(slice(col("osh"), lit(1), prefLen)))
-      .select(col("doc_id"), col("n"), (col("pos") + 1).as("p"),
-        col("col").as("s"))
+    val pref = prefixPositions(rarestFirst(expl), threshold)
     val candRaw = pref.select(col("s"), col("doc_id").as("doc_a"),
         col("n").as("n_a"), col("p").as("p_a"))
       .join(pref.select(col("s"), col("doc_id").as("doc_b"),
@@ -725,10 +746,7 @@ object Dedup {
       shingleLen: Int = 3,
       threshold: Double = 0.8,
       broadcastVerifyMaxBytes: Long = 2L << 30): DataFrame = {
-    val sh = docs.select(
-      col(idCol).as("doc_id"),
-      shingleHashes(col(textCol), shingleLen).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = shingleTable(docs, idCol, textCol, shingleLen)
     // one stats pass over the freshly-persisted shingle frame decides
     // the verification join strategy (see the verify note below) and
     // doubles as the cache warm the pipeline pays anyway. The guard is
@@ -843,7 +861,6 @@ object Dedup {
   private def containmentCandidatesFrom(
       expl: DataFrame, threshold: Double,
       dedup: Boolean = true): DataFrame = {
-    val freq = expl.groupBy(col("s")).agg(count(lit(1)).as("df"))
     // `ordered` feeds the prefix AND the full postings side as one
     // UNMATERIALIZED subtree: Spark's ReuseExchange already
     // deduplicates the identical agg plans, so both sides share one
@@ -852,26 +869,9 @@ object Dedup {
     // checkpoint write traded away the free reuse — and did not fix
     // the 100× disk kill, which lived in the array-carrying
     // verification join, since re-shaped to broadcast hash probes.)
-    val ordered = expl.join(freq, Seq("s"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("fs"))
-      .select(col("doc_id"),
-        transform(col("fs"), f => f.getField("s")).as("osh"))
-    // ε-guarded ceil: rounding may only LENGTHEN the prefix
-    val prefLen = greatest(lit(1),
-      size(col("osh")) -
-        ceil(size(col("osh")) * lit(threshold) - lit(1e-9)).cast("int") + 1)
-    // both sides carry their 1-based POSITION in the shared global
-    // rarest-first order — the PPJoin positional filter's input
-    val pref = ordered.select(col("doc_id"),
-        size(col("osh")).as("n"),
-        posexplode(slice(col("osh"), lit(1), prefLen)))
-      .select(col("doc_id"), col("n"), (col("pos") + 1).as("p"),
-        col("col").as("s"))
-    val full = ordered.select(col("doc_id"),
-        size(col("osh")).as("n"), posexplode(col("osh")))
-      .select(col("doc_id"), col("n"), (col("pos") + 1).as("p"),
-        col("col").as("s"))
+    val ordered = rarestFirst(expl)
+    val pref = prefixPositions(ordered, threshold)
+    val full = positions(ordered, col("osh"))
     val base = pref.select(col("s"), col("doc_id").as("small_id"),
         col("n").as("n_small"), col("p").as("p_small"))
       .join(full.select(col("s"), col("doc_id").as("big_id"),

@@ -84,17 +84,15 @@ object SearchIndex {
   private def bucketOf(c: org.apache.spark.sql.Column, n: Int) =
     pmod(xxhash64(c), lit(n.toLong)).cast("string")
 
-  /** ONE tokenize pass per corpus: the (doc, term, tf) table is the
-    * single source everything else derives from — dl = Σ tf per doc
-    * (zero-token docs re-enter via the id left join), corpus scalars
-    * from the dl table. The tf frame is persisted across those
-    * derivations and unpersisted after the writes materialize.
+  /** ONE tokenize pass per corpus ([[TextOps.termFreqs]] over the
+    * long-cast ids): the (doc, term, tf) table is the single source
+    * everything else derives from — dl = Σ tf per doc (zero-token docs
+    * re-enter via the id left join), corpus scalars from the dl table.
+    * The tf frame is persisted across those derivations and
+    * unpersisted after the writes materialize.
     */
   private def tfOf(docs: DataFrame, idCol: String, textCol: String) =
-    docs.select(col(idCol).cast("long").as("doc_id"),
-        explode(TextOps.tokens(lower(col(textCol)))).as("term"))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
+    TextOps.termFreqs(docs, col(idCol).cast("long"), col(textCol))
 
   private def dlOf(docs: DataFrame, idCol: String, tf: DataFrame) =
     docs.select(col(idCol).cast("long").as("doc_id"))
@@ -220,9 +218,7 @@ object SearchIndex {
     val totalDl = meta("total_dl").toLong
     // persisted: the bucket probe, the vocabulary semi-join, and the
     // scoring fan-out all read it (caller/session owns clearCache)
-    val qterms = queries.select(col(qidCol).as("qid"),
-        explode(TextOps.tokens(lower(col(qtextCol)))).as("term"))
-      .distinct().persist()
+    val qterms = TextOps.queryTerms(queries, qidCol, qtextCol).persist()
     val buckets = qterms
       .select(bucketOf(col("term"), nBuckets).as("b")).distinct()
       .collect().map(_.getString(0)).toSeq
@@ -234,26 +230,14 @@ object SearchIndex {
     // the exact long-to-double division avg(coalesce(dl, 0)) performs
     // over (sum, count) — bit-identical to the live operator's avgdl
     val avgdl = totalDl.toDouble / nDocs
-    val idf = log((lit(nDocs) - col("df") + lit(0.5)) /
-      (col("df") + lit(0.5)) + lit(1.0))
-    val norm = col("tf") * lit(k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) +
-        lit(b) * col("dl").cast("double") / lit(avgdl)))
-    val scores = tfq
-      .join(df, Seq("term"))
-      .withColumn("w", round(idf * norm, 6).cast("decimal(18,6)"))
-      .join(broadcast(qterms), Seq("term"))
-      .groupBy(col("qid"), col("doc_id"))
-      .agg(sum(col("w")).cast("decimal(18,6)").as("score"))
+    val w = tfq.join(df, Seq("term"))
+      .withColumn("w", TextOps.bm25Weight(lit(nDocs), lit(avgdl), k1, b)
+        .cast("decimal(18,6)"))
     // the decimal score ranks (exact, order-independent); the EMITTED
     // score is the 6-dp-rounded double — [[TextOps.bm25Search]]'s
     // certified-surface rule, kept in lockstep so both paths share one
     // oracle verbatim
-    graft.ops.TopK.topKPerGroup(
-        scores.withColumn("neg_id", -col("doc_id")),
-        Seq("qid"),
-        struct(col("score"), col("neg_id"), col("doc_id")),
-        k, largest = true)
+    TextOps.topDocs(TextOps.bm25Scores(w, qterms), "score", k)
       .select(col("qid"), col("rank"), col("doc_id"),
         round(col("score").cast("double"), 6).as("score"))
   }
@@ -283,10 +267,14 @@ object SearchIndex {
     *  - pass 2 (rescore) reads only the expanded vocabulary's buckets
     *    (≤ |q| + `fbTerms` terms per query).
     *
-    * Every derived scalar keeps [[TextOps.rm3Search]]'s 9-dp lattice /
-    * exact-decimal discipline verbatim, so the persisted-index path
+    * Both entry points run the one derivation, [[TextOps.rm3]]: this
+    * one supplies the bucket-pruned posting weights and the id-filtered
+    * forward lookup, so every derived scalar keeps the same 9-dp
+    * lattice / exact-decimal discipline and the persisted-index path
     * replays against the SAME DuckDB oracle (the q_bm25_search_indexed
-    * precedent applied to the two-pass operator).
+    * precedent applied to the two-pass operator). The returned frame
+    * holds one pin, the expansion-vocabulary checkpoint (caller or
+    * session owns it).
     */
   def rm3Search(
       spark: SparkSession,
@@ -304,24 +292,16 @@ object SearchIndex {
       k: Int = 10,
       k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
-    require(fbDocs > 0, s"fbDocs must be positive, got $fbDocs")
-    require(fbTerms > 0, s"fbTerms must be positive, got $fbTerms")
-    require(beta >= 0.0 && beta <= 1.0, s"beta must be in [0,1], got $beta")
-    require(k > 0, s"top-k needs k > 0, got $k")
+    TextOps.requireRm3(fbDocs, fbTerms, beta, k)
     val meta = store.readMeta(s"${name}_postings")
     requireFormat(meta, name)
     val nBuckets = meta("n_buckets").toInt
     val nDocs = meta("n_docs").toLong
-    val totalDl = meta("total_dl").toLong
-    val avgdl = totalDl.toDouble / nDocs
-    val qt = queries.select(col(qidCol).as("qid"),
-        explode(TextOps.tokens(lower(col(qtextCol)))).as("term"))
-      .distinct().persist()
+    val avgdl = meta("total_dl").toLong.toDouble / nDocs
     // per-(doc, term) BM25 weight over a given vocabulary, served from
-    // the vocabulary's buckets only — [[TextOps.rm3Search]]'s weights
-    // builder with (tf, dl) from posting rows and the corpus scalars
-    // from the snapshot meta (both pinned bit-identical by the
-    // q_bm25_search_indexed oracle share)
+    // the vocabulary's buckets only: (tf, dl) from posting rows and
+    // the corpus scalars from the snapshot meta (both pinned
+    // bit-identical by the q_bm25_search_indexed oracle share)
     def weights(terms: DataFrame): DataFrame = {
       val t = terms.select("term").distinct()
       val buckets = t.select(bucketOf(col("term"), nBuckets).as("bk"))
@@ -330,92 +310,22 @@ object SearchIndex {
         .read(spark, s"${name}_postings", postingsSchema, Some(buckets))
         .join(broadcast(t), Seq("term"), "left_semi")
       val df = tfv.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val idf = log((lit(nDocs) - col("df") + lit(0.5)) /
-        (col("df") + lit(0.5)) + lit(1.0))
-      val nrm = col("tf") * lit(k1 + 1.0) /
-        (col("tf") + lit(k1) * (lit(1.0 - b) +
-          lit(b) * col("dl").cast("double") / lit(avgdl)))
       tfv.join(df, Seq("term"))
-        .withColumn("w", round(idf * nrm, 6).cast("decimal(18,6)"))
+        .withColumn("w", TextOps.bm25Weight(lit(nDocs), lit(avgdl), k1, b)
+          .cast("decimal(18,6)"))
         .select("doc_id", "term", "w")
     }
-    // pass 1: original-query BM25 → feedback docs (exact DECIMAL)
-    val s1 = weights(qt.select("term")).join(broadcast(qt), Seq("term"))
-      .groupBy(col("qid"), col("doc_id"))
-      .agg(sum(col("w")).cast("decimal(18,6)").as("score"))
-    val fb = graft.ops.TopK.topKPerGroup(
-        s1.withColumn("neg_id", -col("doc_id")), Seq("qid"),
-        struct(col("score"), col("neg_id"), col("doc_id")),
-        fbDocs, largest = true)
-      .select(col("qid"), col("doc_id"), col("score"))
-      .persist()
-    val ssum = fb.groupBy(col("qid"))
-      .agg(sum(col("score")).cast("decimal(18,6)").as("ssum"))
-    val wdoc = fb.join(ssum, Seq("qid"))
-      .withColumn("wd", round(
-        col("score").cast("double") / col("ssum").cast("double"), 9))
-      .select("qid", "doc_id", "wd")
-    // forward lookup: the feedback documents' own (term, tf, dl) —
+    // forward lookup: the feedback documents' own (term, tf) —
     // tokenize exactly those rows of the corpus table (bounded id
     // filter, pushed to the scan)
-    val fbIds = fb.select(col("doc_id")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val ftf = docs
-      .filter(col(idCol).cast("long").isin(fbIds: _*))
-      .select(col(idCol).cast("long").as("doc_id"),
-        explode(TextOps.tokens(lower(col(textCol)))).as("term"))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .persist()
-    val fdl = ftf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    val prm = wdoc.join(ftf, Seq("doc_id")).join(fdl, Seq("doc_id"))
-      .withColumn("c",
-        round((col("tf") / col("dl")) * col("wd"), 9)
-          .cast("decimal(18,9)"))
-      .groupBy(col("qid"), col("term"))
-      .agg(sum(col("c")).cast("decimal(18,9)").as("p_rm"))
-    val wTerm = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("p_rm").desc, col("term").asc)
-    val expTerms = prm.withColumn("rn", row_number().over(wTerm))
-      .filter(col("rn") <= fbTerms)
-      .select(col("qid"), col("term"), col("p_rm"))
-    val nq = qt.groupBy(col("qid")).agg(count(lit(1)).as("nq"))
-    val orig = qt.join(nq, Seq("qid"))
-      .withColumn("p_orig",
-        round(lit(1.0) / col("nq").cast("double"), 9))
-      .select("qid", "term", "p_orig")
-    val bDec = lit(new java.math.BigDecimal(beta))
-    val mDec = lit(new java.math.BigDecimal(1.0 - beta))
-    val zero9 = lit(0).cast("decimal(18,9)")
-    val wq = orig.join(expTerms, Seq("qid", "term"), "full_outer")
-      .select(col("qid"), col("term"),
-        round(
-          bDec * coalesce(col("p_orig").cast("decimal(18,9)"), zero9) +
-            mDec * coalesce(col("p_rm"), zero9),
-          9).cast("decimal(18,9)").as("wt"))
-      // the expansion vocabulary drives a driver-side bucket collect in
-      // weights() — pin it once (≤ |q| + fbTerms rows per query) so the
-      // pass-2 plan does not re-run pass 1 + RM1 per reference
-      .localCheckpoint()
-    // the eager wq checkpoint (plus the fbIds collect above) has
-    // materialized every plan that reads the three cached pass-1
-    // frames; pass 2 touches only the postings store and wq, so
-    // release them here instead of leaking three cached frames per
-    // library call (Bench's per-sample clearCache masked this)
-    qt.unpersist()
-    fb.unpersist()
-    ftf.unpersist()
-    // pass 2: rescore over the expanded vocabulary's buckets
-    val s2 = weights(wq.select("term")).join(broadcast(wq), Seq("term"))
-      .withColumn("c",
-        round(col("wt") * col("w"), 9).cast("decimal(18,9)"))
-      .groupBy(col("qid"), col("doc_id"))
-      .agg(sum(col("c")).cast("decimal(18,9)").as("score2"))
-    graft.ops.TopK.topKPerGroup(
-        s2.withColumn("neg_id", -col("doc_id")), Seq("qid"),
-        struct(col("score2"), col("neg_id"), col("doc_id")),
-        k, largest = true)
-      .select(col("qid"), col("rank"), col("doc_id"),
-        round(col("score2").cast("double"), 9).as("score"))
+    def feedbackTf(fb: DataFrame): DataFrame = {
+      val ids = fb.select(col("doc_id")).distinct()
+        .collect().map(_.getLong(0)).toSeq
+      tfOf(docs.filter(col(idCol).cast("long").isin(ids: _*)),
+        idCol, textCol).persist()
+    }
+    // persisted: pass 1's bucket probe reads it before the plans do
+    TextOps.rm3(TextOps.queryTerms(queries, qidCol, qtextCol).persist(),
+      weights, feedbackTf, fbDocs, fbTerms, beta, k)
   }
 }

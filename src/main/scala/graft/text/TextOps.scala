@@ -1,15 +1,20 @@
 package graft.text
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines.
   *
-  * Everything here is a pure Column expression built from
-  * `org.apache.spark.sql.functions` — no UDFs — so the whole pipeline
-  * stays inside whole-stage codegen and scales linearly with executors:
-  * a 100 TB corpus is just `documents.select(...)` with no shuffle at
-  * all for per-document features.
+  * Per-document features are Column expressions built from
+  * `org.apache.spark.sql.functions` and the engine's native
+  * expressions — no UDFs — so they stay inside whole-stage codegen
+  * and scale linearly with executors: a 100 TB corpus is just
+  * `documents.select(...)` with no shuffle at all. Corpus operators
+  * (tfidf, BM25/RM3 retrieval, vocabulary and boilerplate statistics)
+  * are DataFrame plans over those expressions. The retrieval math —
+  * the (doc, term, tf) table, the query terms, the BM25 weight, the
+  * top-k tail and the RM3 derivation — is written once here, and
+  * [[SearchIndex]] serves the same math from its persisted postings.
   *
   * Regex patterns are restricted to the syntax subset that Java regex
   * (Spark) and RE2 (DuckDB oracle) interpret identically.
@@ -32,8 +37,7 @@ object TextOps {
     * payload is by construction tiny. Deterministic (sort-before-
     * repartition is on by default) and row-preserving.
     */
-  private[graft] def spreadScan(
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private[graft] def spreadScan(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < par) df.repartition(par) else df
   }
@@ -64,6 +68,66 @@ object TextOps {
   def digitCount(text: Column): Column =
     size(regexp_extract_all(text, lit("[0-9]"), lit(0)))
 
+  /** The (doc_id, term, tf) table: one tokenize+explode pass over
+    * the corpus text, aggregated per (document, term). Every corpus
+    * statistic here (df, dl, N, avgdl) derives from it, and
+    * [[SearchIndex]] builds its postings from the same rows.
+    */
+  private[text] def termFreqs(docs: DataFrame, id: Column, text: Column)
+      : DataFrame =
+    docs.select(id.as("doc_id"), explode(tokens(lower(text))).as("term"))
+      .groupBy(col("doc_id"), col("term"))
+      .agg(count(lit(1)).as("tf"))
+
+  /** The distinct (qid, term) rows of a query table: query text
+    * tokenizes like document text, and a term repeated within one
+    * query counts once (binary query tf).
+    */
+  private[text] def queryTerms(queries: DataFrame, qidCol: String,
+      qtextCol: String): DataFrame =
+    queries.select(col(qidCol).as("qid"),
+        explode(tokens(lower(col(qtextCol)))).as("term"))
+      .distinct()
+
+  /** The 6-dp BM25 weight of a row carrying `tf`, `df` and `dl`:
+    * `idf⁺ · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))` with
+    * `idf⁺ = ln((N−df+0.5)/(df+0.5) + 1)` (the Lucene non-negative
+    * form). The corpus scalars come in as columns — a broadcast
+    * totals row on the live paths, literals from the index meta on
+    * [[SearchIndex]]'s — so every path builds the same expression.
+    */
+  private[text] def bm25Weight(nDocs: Column, avgdl: Column, k1: Double,
+      b: Double): Column = {
+    val idf = log(
+      (nDocs - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0))
+    val norm = col("tf") * lit(k1 + 1.0) /
+      (col("tf") + lit(k1) * (lit(1.0 - b) +
+        lit(b) * col("dl").cast("double") / avgdl))
+    round(idf * norm, 6)
+  }
+
+  /** Per-(query, doc) BM25 score: the exact DECIMAL(18,6) sum of the
+    * matched (doc_id, term, w) weights over each query's terms.
+    */
+  private[text] def bm25Scores(w: DataFrame, qterms: DataFrame)
+      : DataFrame =
+    w.join(broadcast(qterms), Seq("term"))
+      .groupBy(col("qid"), col("doc_id"))
+      .agg(sum(col("w")).cast("decimal(18,6)").as("score"))
+
+  /** The `k` best documents per `qid` by (`scoreCol` desc, doc_id
+    * asc), through the bounded-heap collect aggregate
+    * ([[graft.ops.TopK]]): doc_id rides along negated so the single
+    * `largest` struct ordering breaks ties toward smaller ids.
+    * Output: qid, rank, `scoreCol`, neg_id, doc_id.
+    */
+  private[text] def topDocs(scores: DataFrame, scoreCol: String, k: Int)
+      : DataFrame =
+    graft.ops.TopK.topKPerGroup(
+      scores.withColumn("neg_id", -col("doc_id")), Seq("qid"),
+      struct(col(scoreCol), col("neg_id"), col("doc_id")),
+      k, largest = true)
+
   /** TF-IDF per (document, term): raw term frequency × ln(N/df), no
     * smoothing. Classic corpus weighting for retrieval/quality
     * pipelines. ONE tokenize+explode pass over the corpus text: the
@@ -73,13 +137,8 @@ object TextOps {
     * it (caller or session owns `clearCache`, same contract as
     * [[graft.dedup.Dedup]]); the corpus size broadcasts as a scalar.
     */
-  def tfidf(docs: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String): org.apache.spark.sql.DataFrame = {
-    val tf = docs.select(col(idCol).as("doc_id"),
-        explode(tokens(lower(col(textCol)))).as("term"))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .persist()
+  def tfidf(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val tf = termFreqs(docs, col(idCol), col(textCol)).persist()
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val total = docs.agg(count(lit(1)).as("n_docs"))
     tf.join(df, Seq("term"))
@@ -89,47 +148,42 @@ object TextOps {
       .select("doc_id", "term", "tf", "df", "tfidf")
   }
 
-  /** BM25 per (document, term): the Robertson/Sparck-Jones ranking
-    * function — `idf⁺ · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))` with
-    * `idf⁺ = ln((N−df+0.5)/(df+0.5) + 1)` (the Lucene non-negative
-    * form). One tokenize pass like [[tfidf]] (dl and df derive from
-    * the persisted tf table — same caller-owns-clearCache contract)
-    * plus a broadcast of the two corpus scalars (N, avgdl).
+  /** The (doc_id, dl) lengths and the one-row (n_docs, avgdl) totals
+    * of a corpus tf table: tokenless and null-text documents average
+    * in with length 0 through the id left join.
     */
-  def bm25(docs: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String,
-      k1: Double = 1.2, b: Double = 0.75): org.apache.spark.sql.DataFrame = {
-    // one tokenize+explode pass; dl (doc length) and df (doc freq) both
-    // derive from the persisted (doc,term,tf) table — the round-3 form
-    // re-exploded the corpus text four times (tf, dl, df, totals)
-    val tf = docs.select(col(idCol).as("doc_id"),
-        explode(tokens(lower(col(textCol)))).as("term"))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .persist()
+  private def corpusStats(docs: DataFrame, idCol: String, tf: DataFrame)
+      : (DataFrame, DataFrame) = {
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val totals = docs.select(col(idCol).as("doc_id"))
       .join(dl, Seq("doc_id"), "left")
       .agg(count(lit(1)).as("n_docs"),
         avg(coalesce(col("dl"), lit(0L))).as("avgdl"))
-    val idf = log(
-      (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0))
-    val norm = col("tf") * lit(k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) +
-        lit(b) * col("dl").cast("double") / col("avgdl")))
+    (dl, totals)
+  }
+
+  /** BM25 per (document, term) ([[bm25Weight]], default k1 = 1.2,
+    * b = 0.75). One tokenize pass like [[tfidf]] (dl and df derive
+    * from the persisted tf table — same caller-owns-clearCache
+    * contract) plus a broadcast of the two corpus scalars (N, avgdl).
+    */
+  def bm25(docs: DataFrame, idCol: String, textCol: String,
+      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val tf = termFreqs(docs, col(idCol), col(textCol)).persist()
+    val (dl, totals) = corpusStats(docs, idCol, tf)
+    val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     tf.join(dl, Seq("doc_id"))
       .join(df, Seq("term"))
       .crossJoin(broadcast(totals))
-      .withColumn("bm25", round(idf * norm, 6))
+      .withColumn("bm25", bm25Weight(col("n_docs"), col("avgdl"), k1, b))
       .select("doc_id", "term", "tf", "bm25")
   }
 
   /** BM25 top-k retrieval: score a (small) query table against the
     * corpus and return the `k` best documents per query — the search
     * half of [[bm25]]. Query text tokenizes like document text;
-    * repeated terms within one query count once (the `distinct` on
-    * (qid, term) — standard bag-of-words-with-binary-query-tf BM25).
+    * repeated terms within one query count once ([[queryTerms]] —
+    * standard bag-of-words-with-binary-query-tf BM25).
     * `idCol` must identify documents uniquely (one row per document,
     * the engine-wide corpus contract): the document length rides the
     * posting aggregate as a group key on that assumption, so duplicate
@@ -144,7 +198,7 @@ object TextOps {
     * join was the dominant exchange of every caller).
     * The query table broadcasts (a search workload's query batch is
     * bounded); the final top-k is the bounded-heap collect aggregate
-    * ([[graft.ops.TopK]]) — a broad query matching 10⁸ documents costs
+    * ([[topDocs]]) — a broad query matching 10⁸ documents costs
     * O(n log k) per map task and ships ≤ k-row states, where a window
     * row_number would shuffle and sort every scored row per query.
     * Scores are exact DECIMAL(18,6) sums of the 6-dp per-term weights,
@@ -158,17 +212,14 @@ object TextOps {
     * engine after the round.
     */
   def bm25Search(
-      docs: org.apache.spark.sql.DataFrame,
+      docs: DataFrame,
       idCol: String, textCol: String,
-      queries: org.apache.spark.sql.DataFrame,
+      queries: DataFrame,
       qidCol: String, qtextCol: String,
-      k: Int = 5, k1: Double = 1.2, b: Double = 0.75)
-      : org.apache.spark.sql.DataFrame = {
+      k: Int = 5, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k > 0, s"top-k needs k > 0, got $k")
     val docsS = spreadScan(docs)
-    val qterms = queries.select(col(qidCol).as("qid"),
-        explode(tokens(lower(col(qtextCol)))).as("term"))
-      .distinct()
+    val qterms = queryTerms(queries, qidCol, qtextCol)
     // Postings restricted to the query vocabulary BEFORE the
     // (doc, term) aggregate (guide §2.3 — shuffle fewer bytes): the
     // full-corpus postings table is never built, only tokens that
@@ -201,42 +252,93 @@ object TextOps {
       .select(coalesce(size(tokens(lower(col(textCol)))), lit(0))
         .cast("long").as("dl0"))
       .agg(count(lit(1)).as("n_docs"), avg(col("dl0")).as("avgdl"))
-    val idf = log(
-      (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0))
-    val norm = col("tf") * lit(k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) +
-        lit(b) * col("dl").cast("double") / col("avgdl")))
-    val scores = withDf
+    val w = withDf
       .crossJoin(broadcast(totals))
-      .withColumn("w", round(idf * norm, 6).cast("decimal(18,6)"))
-      .join(broadcast(qterms), Seq("term"))
-      .groupBy(col("qid"), col("doc_id"))
-      .agg(sum(col("w")).cast("decimal(18,6)").as("score"))
-    // (score desc, doc_id asc): doc_id rides along negated so the
-    // single `largest` struct ordering breaks ties toward smaller ids
-    graft.ops.TopK.topKPerGroup(
-        scores.withColumn("neg_id", -col("doc_id")),
-        Seq("qid"),
-        struct(col("score"), col("neg_id"), col("doc_id")),
-        k, largest = true)
+      .withColumn("w", bm25Weight(col("n_docs"), col("avgdl"), k1, b)
+        .cast("decimal(18,6)"))
+    topDocs(bm25Scores(w, qterms), "score", k)
       .select(col("qid"), col("rank"), col("doc_id"),
         round(col("score").cast("double"), 6).as("score"))
   }
 
   /** RM3 pseudo-relevance-feedback search (Lavrenko & Croft relevance
-    * models; the RM3 interpolation of Abdul-Jaleel et al., TREC'04):
-    * BM25 retrieve → estimate an expansion-term distribution from the
-    * top `fbDocs` feedback documents → re-search with the original
-    * query interpolated against the expansion terms. The classic
-    * recall lever when queries underspecify vocabulary.
+    * models; the RM3 interpolation of Abdul-Jaleel et al., TREC'04)
+    * over the live corpus: BM25 retrieve → estimate an expansion-term
+    * distribution from the top `fbDocs` feedback documents → re-search
+    * with the original query interpolated against the expansion
+    * terms. The classic recall lever when queries underspecify
+    * vocabulary. The derivation and its exactness discipline are
+    * [[rm3]]'s; this entry point supplies its postings from one
+    * tokenize pass over the corpus (`(doc, term, tf)`, the per-doc
+    * length and the N/avgdl totals, [[bm25]]'s statistics), and that
+    * same tf table is the feedback documents' vocabulary.
     *
+    * Scale: both BM25 passes semi-join the corpus tf to their
+    * vocabulary, so every stage after the tokenize runs on matched
+    * postings or the feedback-bounded intermediates; the corpus tf is
+    * cached through pass 1 and the RM1 estimate and released at the
+    * expansion checkpoint, so pass 2 re-derives it from the corpus. The
+    * returned frame holds one pin, the expansion-vocabulary checkpoint
+    * (caller or session owns it).
+    *
+    * `beta` must carry a SHORT exact decimal expansion (0.5, 0.25,
+    * 0.75…): its exact binary value becomes a decimal literal in the
+    * interpolation, and a value like 0.3 would drag its full binary
+    * expansion into the decimal plan.
+    */
+  def rm3Search(
+      docs: DataFrame,
+      idCol: String, textCol: String,
+      queries: DataFrame,
+      qidCol: String, qtextCol: String,
+      fbDocs: Int = 10, fbTerms: Int = 10, beta: Double = 0.5,
+      k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    requireRm3(fbDocs, fbTerms, beta, k)
+    val tf = termFreqs(docs, col(idCol), col(textCol)).persist()
+    val (dl, totals) = corpusStats(docs, idCol, tf)
+    def weights(terms: DataFrame): DataFrame = {
+      val tfv = tf.join(broadcast(terms.select("term").distinct()),
+        Seq("term"), "left_semi")
+      val df = tfv.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      tfv.join(dl, Seq("doc_id")).join(df, Seq("term"))
+        .crossJoin(broadcast(totals))
+        .withColumn("w", bm25Weight(col("n_docs"), col("avgdl"), k1, b)
+          .cast("decimal(18,6)"))
+        .select("doc_id", "term", "w")
+    }
+    rm3(queryTerms(queries, qidCol, qtextCol), weights, _ => tf,
+      fbDocs, fbTerms, beta, k)
+  }
+
+  /** RM3's parameter checks, run by both entry points first. */
+  private[text] def requireRm3(fbDocs: Int, fbTerms: Int, beta: Double,
+      k: Int): Unit = {
+    require(fbDocs > 0, s"fbDocs must be positive, got $fbDocs")
+    require(fbTerms > 0, s"fbTerms must be positive, got $fbTerms")
+    require(beta >= 0.0 && beta <= 1.0, s"beta must be in [0,1], got $beta")
+    require(k > 0, s"top-k needs k > 0, got $k")
+  }
+
+  /** The RM3 derivation, written once for both postings sources (this
+    * object's live [[rm3Search]] and [[SearchIndex.rm3Search]]):
+    *
+    *  - pass 1: BM25 over the original query terms `qt` → the top
+    *    `fbDocs` feedback documents per query ([[topDocs]]);
     *  - RM1 term weights: `p(t|R) = Σ_d (tf(t,d)/dl(d)) · wd(d)` over
     *    the feedback docs, `wd` the BM25-score-normalized doc weight;
-    *    top `fbTerms` terms by (weight desc, term asc).
+    *    top `fbTerms` terms by (weight desc, term asc);
     *  - RM3: `w(t) = β·p_orig(t) + (1−β)·p_rm(t)` with
-    *    `p_orig = 1/|q|` uniform over the original terms.
-    *  - Re-score: `Σ_t w(t) · bm25(t, d)` over the expanded
-    *    vocabulary, top `k` by (score desc, doc_id asc).
+    *    `p_orig = 1/|q|` uniform over the original terms;
+    *  - pass 2: `Σ_t w(t) · bm25(t, d)` over the expanded vocabulary,
+    *    top `k` by (score desc, doc_id asc).
+    *
+    * Each path supplies only its data: `weights` maps a frame of
+    * `term`s to the (doc_id, term, w) 6-dp DECIMAL BM25 weights of
+    * that vocabulary's postings, and `feedbackTf` maps the persisted
+    * feedback cut (qid, doc_id, score) to a persisted (doc_id, term,
+    * tf) table covering at least those documents (dl is their tf
+    * sum), which this derivation releases. The caller checks the
+    * parameters ([[requireRm3]]) before it builds anything.
     *
     * Engine-exactness (the bm25Search discipline extended): per-term
     * BM25 weights stay 6-dp DECIMAL; every derived scalar (normalized
@@ -246,67 +348,22 @@ object TextOps {
     * BEFORE each exact-decimal sum — so both ranking passes and the
     * emitted scores replay in DuckDB to hash equality.
     *
-    * Scale: two bm25-shaped passes (query-vocabulary semi-joins keep
-    * every stage on matched postings) plus feedback-bounded
-    * intermediates — `fb` is ≤ fbDocs rows per query, the RM1 window
-    * ranks only the feedback docs' vocabulary, and the expanded
-    * vocabulary is ≤ |q| + fbTerms terms per query.
-    *
-    * `beta` must carry a SHORT exact decimal expansion (0.5, 0.25,
-    * 0.75…): its exact binary value becomes a decimal literal in the
-    * interpolation, and a value like 0.3 would drag its full binary
-    * expansion into the decimal plan.
+    * Pins: the feedback cut, the feedback tf and `qt` (which the
+    * index path persists for its bucket probe) are cached while pass 1
+    * and RM1 run; the expansion vocabulary (≤ |q| + fbTerms rows per
+    * query) is then pinned by an eager `localCheckpoint`, which
+    * materializes every plan that reads them, and all three are
+    * released before pass 2 is built. The returned frame holds
+    * exactly one pin, that checkpoint, read by pass 2.
     */
-  def rm3Search(
-      docs: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String,
-      queries: org.apache.spark.sql.DataFrame,
-      qidCol: String, qtextCol: String,
-      fbDocs: Int = 10, fbTerms: Int = 10, beta: Double = 0.5,
-      k: Int = 10, k1: Double = 1.2, b: Double = 0.75)
-      : org.apache.spark.sql.DataFrame = {
-    require(fbDocs > 0, s"fbDocs must be positive, got $fbDocs")
-    require(fbTerms > 0, s"fbTerms must be positive, got $fbTerms")
-    require(beta >= 0.0 && beta <= 1.0, s"beta must be in [0,1], got $beta")
-    require(k > 0, s"top-k needs k > 0, got $k")
-    val qt = queries.select(col(qidCol).as("qid"),
-        explode(tokens(lower(col(qtextCol)))).as("term"))
-      .distinct()
-    val tf = docs.select(col(idCol).as("doc_id"),
-        explode(tokens(lower(col(textCol)))).as("term"))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .persist()
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    val totals = docs.select(col(idCol).as("doc_id"))
-      .join(dl, Seq("doc_id"), "left")
-      .agg(count(lit(1)).as("n_docs"),
-        avg(coalesce(col("dl"), lit(0L))).as("avgdl"))
-    // per-(doc, term) BM25 weight over a given vocabulary — the
-    // bm25Search formula verbatim (6-dp DECIMAL)
-    def weights(terms: org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame = {
-      val tfv = tf.join(broadcast(terms.select("term").distinct()),
-        Seq("term"), "left_semi")
-      val df = tfv.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val idf = log((col("n_docs") - col("df") + lit(0.5)) /
-        (col("df") + lit(0.5)) + lit(1.0))
-      val nrm = col("tf") * lit(k1 + 1.0) /
-        (col("tf") + lit(k1) * (lit(1.0 - b) +
-          lit(b) * col("dl").cast("double") / col("avgdl")))
-      tfv.join(dl, Seq("doc_id")).join(df, Seq("term"))
-        .crossJoin(broadcast(totals))
-        .withColumn("w", round(idf * nrm, 6).cast("decimal(18,6)"))
-        .select("doc_id", "term", "w")
-    }
-    // pass 1: original-query BM25 → feedback docs
-    val s1 = weights(qt.select("term")).join(broadcast(qt), Seq("term"))
-      .groupBy(col("qid"), col("doc_id"))
-      .agg(sum(col("w")).cast("decimal(18,6)").as("score"))
-    val fb = graft.ops.TopK.topKPerGroup(
-        s1.withColumn("neg_id", -col("doc_id")), Seq("qid"),
-        struct(col("score"), col("neg_id"), col("doc_id")),
-        fbDocs, largest = true)
+  private[text] def rm3(
+      qt: DataFrame,
+      weights: DataFrame => DataFrame,
+      feedbackTf: DataFrame => DataFrame,
+      fbDocs: Int, fbTerms: Int, beta: Double, k: Int): DataFrame = {
+    // pass 1: original-query BM25 → feedback docs (exact DECIMAL)
+    val fb = topDocs(bm25Scores(weights(qt.select("term")), qt),
+        "score", fbDocs)
       .select(col("qid"), col("doc_id"), col("score"))
       .persist()
     val ssum = fb.groupBy(col("qid"))
@@ -316,7 +373,9 @@ object TextOps {
         col("score").cast("double") / col("ssum").cast("double"), 9))
       .select("qid", "doc_id", "wd")
     // RM1 over the feedback docs' own vocabulary
-    val prm = wdoc.join(tf, Seq("doc_id")).join(dl, Seq("doc_id"))
+    val ftf = feedbackTf(fb)
+    val fdl = ftf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+    val prm = wdoc.join(ftf, Seq("doc_id")).join(fdl, Seq("doc_id"))
       .withColumn("c",
         round((col("tf") / col("dl")) * col("wd"), 9)
           .cast("decimal(18,9)"))
@@ -350,16 +409,19 @@ object TextOps {
           bDec * coalesce(col("p_orig").cast("decimal(18,9)"), zero9) +
             mDec * coalesce(col("p_rm"), zero9),
           9).cast("decimal(18,9)").as("wt"))
+      // pinned once so the pass-2 plan (and any driver-side work its
+      // `weights` does on the vocabulary) never re-runs pass 1 + RM1
+      .localCheckpoint()
+    qt.unpersist()
+    fb.unpersist()
+    ftf.unpersist()
     // pass 2: rescore over the expanded vocabulary
     val s2 = weights(wq.select("term")).join(broadcast(wq), Seq("term"))
       .withColumn("c",
         round(col("wt") * col("w"), 9).cast("decimal(18,9)"))
       .groupBy(col("qid"), col("doc_id"))
       .agg(sum(col("c")).cast("decimal(18,9)").as("score2"))
-    graft.ops.TopK.topKPerGroup(
-        s2.withColumn("neg_id", -col("doc_id")), Seq("qid"),
-        struct(col("score2"), col("neg_id"), col("doc_id")),
-        k, largest = true)
+    topDocs(s2, "score2", k)
       .select(col("qid"), col("rank"), col("doc_id"),
         round(col("score2").cast("double"), 9).as("score"))
   }
@@ -395,9 +457,9 @@ object TextOps {
     *         floor division, 0 for empty documents
     */
   def oovRate(
-      docs: org.apache.spark.sql.DataFrame,
+      docs: DataFrame,
       idCol: Column, textCol: Column,
-      vocabSize: Int): org.apache.spark.sql.DataFrame = {
+      vocabSize: Int): DataFrame = {
     require(vocabSize >= 1, s"vocabSize must be >= 1, got $vocabSize")
     val tok = docs.select(idCol.as("id"),
       explode(tokens(textCol)).as("token"))
@@ -439,9 +501,9 @@ object TextOps {
     * @return (s1, s2, inter, union_nv, jaccard_bp) for s1 < s2
     */
   def sourceVocabOverlap(
-      docs: org.apache.spark.sql.DataFrame,
+      docs: DataFrame,
       sliceCol: Column, textCol: Column)
-      : org.apache.spark.sql.DataFrame = {
+      : DataFrame = {
     val st = docs
       .select(sliceCol.as("src"), explode(tokens(textCol)).as("token"))
       .distinct()
@@ -515,9 +577,9 @@ object TextOps {
     * overlap/stride).
     */
   def chunkTokens(
-      docs: org.apache.spark.sql.DataFrame,
+      docs: DataFrame,
       idCol: String, textCol: String,
-      chunkSize: Int = 40, overlap: Int = 10): org.apache.spark.sql.DataFrame = {
+      chunkSize: Int = 40, overlap: Int = 10): DataFrame = {
     require(overlap >= 0 && chunkSize > overlap,
       s"need chunkSize > overlap >= 0, got size=$chunkSize overlap=$overlap")
     val stride = chunkSize - overlap
@@ -570,12 +632,9 @@ object TextOps {
     * corpus, no driver involvement; ratios round(6) for
     * engine-identical hashing.
     */
-  def repetitionSignals(docs: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String): org.apache.spark.sql.DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-        explode(tokens(lower(col(textCol)))).as("term"))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
+  def repetitionSignals(docs: DataFrame,
+      idCol: String, textCol: String): DataFrame =
+    termFreqs(docs, col(idCol), col(textCol))
       .groupBy(col("doc_id"))
       .agg(
         sum(col("tf")).as("n_tokens"),
@@ -629,9 +688,9 @@ object TextOps {
     * row per metric.
     */
   def corpusCard(
-      docs: org.apache.spark.sql.DataFrame,
+      docs: DataFrame,
       sourceCol: String,
-      textCol: String): org.apache.spark.sql.DataFrame = {
+      textCol: String): DataFrame = {
     val prepared = docs.select(
       col(sourceCol).as("__src"),
       length(col(textCol)).cast("long").as("__chars"),
@@ -685,11 +744,11 @@ object TextOps {
     * doc-keyed reassembly); on the common broadcast path, once.
     */
   def stripBoilerplate(
-      docs: org.apache.spark.sql.DataFrame,
+      docs: DataFrame,
       idCol: String,
       textCol: String,
       segLen: Int = 10,
-      minDocs: Int = 2): org.apache.spark.sql.DataFrame = {
+      minDocs: Int = 2): DataFrame = {
     require(segLen > 0 && minDocs > 1,
       s"need segLen > 0 and minDocs > 1, got $segLen/$minDocs")
     val segs = chunkTokens(docs, idCol, textCol,

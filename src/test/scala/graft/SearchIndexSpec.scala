@@ -56,6 +56,30 @@ class SearchIndexSpec extends SparkTestBase {
     spark.catalog.clearCache()
   }
 
+  test("each RM3 path leaves one pin: the expansion checkpoint it reads") {
+    val docs = corpus.toDF("doc_id", "text")
+    val qs = queries.toDF("qid", "qtext")
+    val store = newStore("rm3pins")
+    SearchIndex.build(store, "docs", docs, "doc_id", "text", nBuckets = 16)
+    def checkPins(path: String)(run: => org.apache.spark.sql.DataFrame) = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val res = run
+      res.collect()
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      val read = res.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }.toSet
+      assert(added.size == 1 && added == read,
+        s"$path RM3 left pins $added; its output reads checkpoints $read")
+      added.foreach(spark.sparkContext.getPersistentRDDs(_).unpersist())
+    }
+    checkPins("live")(TextOps.rm3Search(docs, "doc_id", "text",
+      qs, "qid", "qtext", fbDocs = 2, fbTerms = 2, beta = 0.5, k = 4))
+    checkPins("indexed")(SearchIndex.rm3Search(spark, store, "docs",
+      docs, "doc_id", "text",
+      qs, "qid", "qtext", fbDocs = 2, fbTerms = 2, beta = 0.5, k = 4))
+  }
+
   test("indexed RM3 pass-1 reads only the query terms' buckets") {
     val docs = corpus.toDF("doc_id", "text")
     val store = newStore("rm3prune")
