@@ -134,11 +134,10 @@ object Bench {
 
   /** Drop every RDD still pinned in executor storage. Operators hand
     * back eagerly-checkpointed frames (localCheckpoint pins blocks
-    * that `catalog.clearCache()` cannot see — it only clears the SQL
-    * relation cache), and once the timed action has consumed a result
-    * those blocks are reclaimed only when a driver GC cycle feeds the
-    * ASYNC ContextCleaner — under -Xmx100g that lags many samples
-    * behind. The r17 10× campaign measured q_basket_pmi degrading
+    * outside the SQL relation cache), and once the timed action has
+    * consumed a result those blocks are reclaimed only when a driver
+    * GC cycle feeds the ASYNC ContextCleaner — under -Xmx100g that
+    * lags many samples behind. The r17 10× campaign measured q_basket_pmi degrading
     * [15.1, 93.5, 251.2] s across its three samples in one JVM from
     * exactly this accumulation (history/OPTIMIZATION_r17.md §2.5).
     * Between samples nothing may legitimately stay pinned (the
@@ -194,10 +193,8 @@ object Bench {
       names.foreach { n =>
         SparkEntry.queries(n)(spark, warmDir)
           .write.mode("overwrite").format("noop").save()
-        spark.catalog.clearCache()
       }
     }
-    spark.catalog.clearCache()
     System.gc()
     dropDeadPins(spark)
     val shuffle = new ShuffleListener
@@ -243,10 +240,7 @@ object Bench {
         // query's shuffle bytes land on the query that caused them
         GraftCoreShims.drainListenerBus(spark.sparkContext)
         val sh = (shuffle.read.get(), shuffle.write.get())
-        // queries persist intermediate signature tables; drop them so
-        // timings stay independent, and nudge GC so one query's garbage
-        // is not billed to the next
-        spark.catalog.clearCache()
+        // nudge GC so one query's garbage is not billed to the next
         System.gc()
         dropDeadPins(spark)
         // shuffle files are reclaimed by the ASYNC ContextCleaner,

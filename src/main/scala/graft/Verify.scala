@@ -31,11 +31,9 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // some queries persist signature tables; keep runs independent
-      spark.catalog.clearCache()
-      // dead localCheckpoint pins are RDD-level state clearCache cannot
-      // see — reclaim them synchronously so a 231-query dump doesn't
-      // accumulate them (the Bench between-samples discipline)
+      // reclaim the query's dead localCheckpoint pins synchronously so
+      // a 231-query dump doesn't accumulate them (the Bench
+      // between-samples discipline)
       Bench.dropDeadPins(spark)
     }
     // hard signal for the approximate queries: recall/precision vs
@@ -52,7 +50,6 @@ object Verify {
     catch { case e: Throwable =>
       System.err.println(s"[verify] recall failed: ${e.getMessage}")
     }
-    spark.catalog.clearCache()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Pins
 import graft.text.TextOps
 
 /** Document deduplication operators: exact, MinHash+LSH (estimate and
@@ -22,15 +23,6 @@ import graft.text.TextOps
   *  - exact Jaccard is reserved for candidate verification, never run
   *    all-pairs at scale (the all-pairs form exists for small inputs
   *    and as the correctness oracle for the approximate paths).
-  *
-  * ==Cache lifecycle contract==
-  * The pair/signature pipelines persist small intermediate frames
-  * (signature tables, fingerprint sets) that the RETURNED plan
-  * references more than once — unpersisting inside the builder would
-  * recompute them per reference. The entries release when the caller
-  * drops the result, or eagerly via `spark.catalog.clearCache()`
-  * between unrelated pipelines (what Verify/Bench do between queries).
-  * Long-lived sessions embedding these operators should do the same.
   */
 object Dedup {
 
@@ -157,14 +149,14 @@ object Dedup {
     val r = numHashes / bands
 
     // signature table: small (id + k longs), read twice by the bucket
-    // self-join — persist so shingling/hashing runs once per document.
-    // At cluster scale this is the signature table you would materialize
-    // to storage anyway.
+    // self-join — materialized once so shingling/hashing runs once per
+    // document. At cluster scale this is the signature table you would
+    // materialize to storage anyway.
     val signed = docs.select(
       col(idCol).as("doc_id"),
       graft.functions.GraftFunctions.minhashSignature(
         shingleHashes(col(textCol), shingleLen), numHashes).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Pins.materializeOnce)
 
     minhashCandidates(signed, bands, r, maxBucket)
       .join(signed.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")),
@@ -205,9 +197,9 @@ object Dedup {
     val r = numHashes / bands
 
     // (doc_id, shingle-hash set) feeds both signature and verification;
-    // persist so the text is shingled once. Verification intersects
-    // hash sets — equal to the string-set intersection up to 64-bit
-    // collisions (P ≈ n²·2⁻⁶⁴).
+    // materialized once so the text is shingled once. Verification
+    // intersects hash sets — equal to the string-set intersection up
+    // to 64-bit collisions (P ≈ n²·2⁻⁶⁴).
     val sh = shingleTable(docs, idCol, textCol, shingleLen)
     val signed = sh.select(
       col("doc_id"),
@@ -246,10 +238,10 @@ object Dedup {
       shingleLen: Int = 3,
       threshold: Double = 0.8): DataFrame = {
     // the shingle-hash table feeds sizes + both self-join sides —
-    // persist so tokenization/shingling runs once. Joining on the
-    // 8-byte hash instead of the string is ~3× less shuffle payload; a
-    // cross-doc 64-bit collision (P ≈ n²·2⁻⁶⁴) is the same tolerance
-    // every hash-join engine accepts
+    // materialized once so tokenization/shingling runs once. Joining
+    // on the 8-byte hash instead of the string is ~3× less shuffle
+    // payload; a cross-doc 64-bit collision (P ≈ n²·2⁻⁶⁴) is the same
+    // tolerance every hash-join engine accepts
     val sh = shingleTable(docs, idCol, textCol, shingleLen)
     val sizes = sh.select(col("doc_id"), size(col("sh")).as("n_sh"))
     val expl = sh.select(col("doc_id"), explode(col("sh")).as("s"))
@@ -297,7 +289,7 @@ object Dedup {
         col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("common"))
-    val pairs = common
+    common
       .join(sizes.withColumnRenamed("doc_id", "doc_a")
         .withColumnRenamed("n_sh", "n_a"), Seq("doc_a"))
       .join(sizes.withColumnRenamed("doc_id", "doc_b")
@@ -308,13 +300,9 @@ object Dedup {
       .filter(col("containment") >= threshold)
       .select(col("doc_a"), col("doc_b"),
         round(col("containment"), 6).as("containment"))
-      // materialize-then-release (the Basket ca83a16 discipline): the
-      // thresholded pair table is the bounded output — checkpoint it
-      // eagerly so the shingle frame can be unpinned before return,
-      // instead of leaking one MEMORY_AND_DISK frame per call
+      // the thresholded pair table is the bounded output — checkpointed,
+      // the shingle checkpoint has no reader once the call returns
       .localCheckpoint()
-    sh.unpersist()
-    pairs
   }
 
   /** Label-propagation steps [[nearDupClusters]] chains lazily
@@ -535,11 +523,11 @@ object Dedup {
       idCol: String,
       textCol: String,
       maxDist: Int = 7): DataFrame = {
-    // (doc_id, 64-bit hash) — tiny; persist so the shingling + simhash
-    // computation runs once, not once per join side.
+    // (doc_id, 64-bit hash) — tiny; materialized once so the
+    // shingling + simhash computation runs once, not once per join side.
     val hashed = docs.select(
       col(idCol).as("doc_id"), simhash(col(textCol)).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Pins.materializeOnce)
     // chunk key = (chunk index, 8 hash bits) packed into one long —
     // a compact shuffle key instead of round 1's built strings
     val chunkKeys = array((0 until 8).map { i =>
@@ -560,31 +548,37 @@ object Dedup {
       .select("doc_a", "doc_b", "hamming")
   }
 
-  /** The `(doc_id, sh)` shingle-hash table, persisted MEMORY_AND_DISK:
-    * every exact and verified near-dup path reads it more than once
-    * (sizes, self-join or prefix sides, verification), so the text is
-    * shingled once. The paths that checkpoint their pair table
-    * unpersist it before they return; the lazy ones leave it to the
-    * caller or session (`clearCache`).
+  /** The `(doc_id, sh)` shingle-hash table, materialized once
+    * ([[graft.ops.Pins.materializeOnce]]): every exact and verified
+    * near-dup path reads it more than once (sizes, self-join or prefix
+    * sides, verification), so the text is shingled once.
     */
   private def shingleTable(docs: DataFrame, idCol: String, textCol: String,
+      shingleLen: Int): DataFrame =
+    Pins.materializeOnce(shingleRows(docs, idCol, textCol, shingleLen))
+
+  private def shingleRows(docs: DataFrame, idCol: String, textCol: String,
       shingleLen: Int): DataFrame =
     docs.select(
       col(idCol).as("doc_id"),
       shingleHashes(col(textCol), shingleLen).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-  /** Estimated in-memory size of a `(doc_id, sh: array<long>)` frame
+  /** [[shingleTable]], checkpointed, with its estimated in-memory size
     * as a broadcast hash relation: 8 B per shingle hash plus ~48 B of
     * per-row fixed cost (UnsafeRow header + array header + the
-    * relation's key slot). One count+sum aggregate over the frame —
-    * the callers run it against their freshly-persisted shingle
-    * table, so the job doubles as the cache warm they need anyway.
+    * relation's key slot). An observation counts the rows and hashes
+    * as the checkpoint materializes, so the estimate runs no job of
+    * its own.
     */
-  private def shingleTableBytes(sh: DataFrame): Long = {
-    val st = sh.agg(count(lit(1)).as("n"),
-      coalesce(sum(size(col("sh"))), lit(0L)).as("tot")).head()
-    st.getLong(1) * 8L + st.getLong(0) * 48L
+  private def sizedShingleTable(docs: DataFrame, idCol: String,
+      textCol: String, shingleLen: Int): (DataFrame, Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    val sh = shingleRows(docs, idCol, textCol, shingleLen)
+      .observe(obs, count(lit(1)).as("n"),
+        coalesce(sum(size(col("sh"))), lit(0L)).as("tot"))
+      .localCheckpoint()
+    val st = obs.get
+    (sh, st("tot").asInstanceOf[Long] * 8L + st("n").asInstanceOf[Long] * 48L)
   }
 
   /** Each document's shingles in the canonical rarest-first order
@@ -646,16 +640,14 @@ object Dedup {
       shingleLen: Int = 3,
       threshold: Double = 0.8,
       broadcastVerifyMaxBytes: Long = 2L << 30): DataFrame = {
-    val sh = shingleTable(docs, idCol, textCol, shingleLen)
+    val (sh, shBytes) = sizedShingleTable(docs, idCol, textCol, shingleLen)
     // same guarded verify strategy as [[ngramContainmentPairsPrefix]]
     // (see the measured head-to-head there): under the BYTE cap the
     // per-doc array table broadcasts and candidates stream through
     // hash probes — no array-carrying sort-merge join anywhere. The
     // guard prices the broadcast in estimated bytes (long-document
-    // corpora blow a row-count guard long before 2M docs), and the
-    // stats job doubles as the cache warm for the persisted frame.
-    val broadcastVerify =
-      shingleTableBytes(sh) <= broadcastVerifyMaxBytes
+    // corpora blow a row-count guard long before 2M docs).
+    val broadcastVerify = shBytes <= broadcastVerifyMaxBytes
     val expl = sh.select(col("doc_id"), explode(col("sh")).as("s"))
     val pref = prefixPositions(rarestFirst(expl), threshold)
     val candRaw = pref.select(col("s"), col("doc_id").as("doc_a"),
@@ -746,13 +738,12 @@ object Dedup {
       shingleLen: Int = 3,
       threshold: Double = 0.8,
       broadcastVerifyMaxBytes: Long = 2L << 30): DataFrame = {
-    val sh = shingleTable(docs, idCol, textCol, shingleLen)
-    // one stats pass over the freshly-persisted shingle frame decides
-    // the verification join strategy (see the verify note below) and
-    // doubles as the cache warm the pipeline pays anyway. The guard is
-    // sized in estimated BYTES, not document count: a long-document
-    // corpus can blow Spark's broadcast limit at a fraction of the old
-    // 2M-row cap, and a short-document one can broadcast far past it.
+    val (sh, shBytes) = sizedShingleTable(docs, idCol, textCol, shingleLen)
+    // the shingle table's estimated size decides the verification
+    // join strategy (see the verify note below). The guard is sized in
+    // estimated BYTES, not document count: a long-document corpus can
+    // blow Spark's broadcast limit at a fraction of the old 2M-row
+    // cap, and a short-document one can broadcast far past it.
     // Under the cap the whole sorted-array table fits a broadcast hash
     // relation on warehouse-grade executors (the default 2 GiB leaves
     // headroom under Spark's 8 GB broadcast hard limit even with both
@@ -761,8 +752,7 @@ object Dedup {
     // rows; past the cap (the real-cluster corpus) the joins fall back
     // to shuffled form and partition-fit is the operator's documented
     // scale knob.
-    val broadcastVerify =
-      shingleTableBytes(sh) <= broadcastVerifyMaxBytes
+    val broadcastVerify = shBytes <= broadcastVerifyMaxBytes
     val expl = sh.select(col("doc_id"), explode(col("sh")).as("s"))
     // VERIFICATION — the 100×-sweep disk kill lived here, and the fix
     // is the JOIN STRATEGY, not just the row shape (all three shapes
@@ -807,7 +797,7 @@ object Dedup {
     // fan multiplies candidates × |small| and must price deduped
     // candidates. Both branches compute the identical exact overlap
     // (DedupSpec pins them to the direct form's output).
-    val pairs = (if (broadcastVerify) {
+    (if (broadcastVerify) {
       containmentCandidatesFrom(expl, threshold, dedup = false)
         .join(broadcast(
             sh.select(col("doc_id").as("small_id"), col("sh").as("sh_a"))),
@@ -843,13 +833,9 @@ object Dedup {
       // outright (history/ADVICE.md)
       .transform(df =>
         if (broadcastVerify) df.dropDuplicates("doc_a", "doc_b") else df)
-      // materialize-then-release (the Basket ca83a16 discipline): the
-      // thresholded pair table is the bounded output — checkpoint it
-      // eagerly so the shingle frame can be unpinned before return,
-      // instead of leaking one MEMORY_AND_DISK frame per call
+      // the thresholded pair table is the bounded output — checkpointed,
+      // the shingle checkpoint has no reader once the call returns
       .localCheckpoint()
-    sh.unpersist()
-    pairs
   }
 
   /** The asymmetric prefix filter's candidate stage over an exploded
@@ -986,7 +972,7 @@ object Dedup {
       col(idCol).as("doc_id"),
       explode(graft.functions.GraftFunctions.winnow(col(textCol), k, w))
         .as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Pins.materializeOnce)
     val ok = dropOversizedBuckets(fp, "fp", maxBucket)
     ok.select(col("fp"), col("doc_id").as("doc_a"))
       .join(ok.select(col("fp"), col("doc_id").as("doc_b")), Seq("fp"))
@@ -1060,10 +1046,10 @@ object Dedup {
       col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", Knn.norm(col("v")))
       .filter(col("nrm") > 0) // no-direction rows: see embeddingNearDup
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Pins.materializeOnce)
     // All tables' signatures in ONE native-expression pass
     // ([[graft.functions.HyperplaneSignatures]]), materialized once per
-    // row by the generator and persisted as a tiny table-tagged
+    // row by the generator and materialized as a tiny table-tagged
     // (id, bucket) frame — the hyperplane dot products run exactly once
     // per vector inside codegen, and the bucket join works on bare
     // 16-byte rows, never shipping vectors.
@@ -1073,7 +1059,7 @@ object Dedup {
       .select(col("vec_id"), posexplode(sigArr).as(Seq("tbl", "sig")))
       .select(col("vec_id"),
         (col("sig") + col("tbl").cast("long") * lit(1L << bits)).as("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Pins.materializeOnce)
     // a-side probes = the tagged bucket plus each low-bit flip (the
     // table tag lives above `bits`, so XOR stays inside the table);
     // b-side occupies its own bucket per table
@@ -1249,10 +1235,8 @@ object Dedup {
     def side(df: DataFrame, as: String): DataFrame = df.select(
       col(idCol).as(as),
       shingleHashes(col(textCol), shingleLen).as("sh"))
-    val b = side(batch, "batch_doc")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val c = side(corpus, "corpus_doc")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val b = Pins.materializeOnce(side(batch, "batch_doc"))
+    val c = Pins.materializeOnce(side(corpus, "corpus_doc"))
     val common = b.select(col("batch_doc"), explode(col("sh")).as("s"))
       .join(c.select(col("corpus_doc"), explode(col("sh")).as("s")), Seq("s"))
       .groupBy(col("batch_doc"), col("corpus_doc"))
@@ -1322,7 +1306,7 @@ object Dedup {
     def side(df: DataFrame, as: String): DataFrame = df.select(
       col(idCol).as(as),
       shingleHashes(col(textCol), shingleLen).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Pins.materializeOnce)
     val b = side(batch, "batch_doc")
     val c = side(corpus, "corpus_doc")
     def bandedSide(s: DataFrame, id: String): DataFrame = s.select(

@@ -5,6 +5,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Pins
 import Multimodal.Asset
 
 /** DCT perceptual hashing (pHash) over really-decoded images — the
@@ -218,37 +219,6 @@ object Phash {
   /** Per-image pHash row. */
   final case class ImageHash(asset_id: Long, ph_hi: Long, ph_lo: Long)
 
-  /** Materialize a hash frame ONCE: `localCheckpoint()` unless the
-    * plan already sits on materialized data — a LogicalRDD (the
-    * product of an earlier local/reliable checkpoint) or a
-    * LocalRelation, possibly under cheap narrow ops (Project /
-    * Filter / aliasing only). Callers that pre-materialize a frame
-    * consumed by several of these operators (the ingest gates feed
-    * one checkpointed frame through [[graft.streaming.ImageIngest
-    * .gateBatch]], which feeds [[neardupPairs]]) must not stack a
-    * second and third eager block copy per call — each lingers until
-    * GC. Re-running a projection or filter over an already-pinned
-    * RDD per consumer is strictly cheaper than another full copy;
-    * anything wider (a join, an aggregate, a decode pipeline) still
-    * checkpoints — and so does any NONDETERMINISTIC narrow op: the
-    * whole point of pinning is that every consumer observes the same
-    * rows, which a re-run nondeterministic projection/filter over a
-    * pinned RDD would break.
-    */
-  private[graft] def materializeOnce(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    def cheap(p: LogicalPlan): Boolean = p match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
-      case _: LocalRelation => true
-      case pr: Project =>
-        pr.projectList.forall(_.deterministic) && cheap(pr.child)
-      case f: Filter => f.condition.deterministic && cheap(f.child)
-      case a: SubqueryAlias => cheap(a.child)
-      case _ => false
-    }
-    if (cheap(df.queryExecution.logical)) df else df.localCheckpoint()
-  }
-
   /** REAL decode → integer DCT → 64-bit hash, per partition, no
     * shuffle. Fails loudly on undecodable or wrong-sized payloads
     * (the ImageIoCodec quarantine discipline).
@@ -342,8 +312,8 @@ object Phash {
     require(k >= 1, s"top-k needs k >= 1, got $k")
     // probe and candidate sides both read the hash frame —
     // materialize once (the neardupPairs double-decode lesson),
-    // unless the caller already did ([[materializeOnce]])
-    val banded = bandRows(materializeOnce(hashes), idCol)
+    // unless the caller already did ([[graft.ops.Pins.materializeOnce]])
+    val banded = bandRows(Pins.materializeOnce(hashes), idCol)
     val probe = banded.filter(probePred)
       .select(col(idCol).as("probe_id"),
         col("ph_hi").as("p_hi"), col("ph_lo").as("p_lo"),
@@ -374,8 +344,9 @@ object Phash {
     // upstream pipeline, which for the media families means decoding
     // the corpus twice (measured: q_audio_neardup 6.2 s → the
     // fingerprint pass is 2.8 s — both sides re-ran synth+decode);
-    // skipped when the caller already materialized ([[materializeOnce]])
-    val banded = bandRows(materializeOnce(hashes), idCol)
+    // skipped when the caller already materialized
+    // ([[graft.ops.Pins.materializeOnce]])
+    val banded = bandRows(Pins.materializeOnce(hashes), idCol)
       .withColumnRenamed(idCol, "id")
     val left = banded.select(col("id").as("id_1"),
       col("ph_hi").as("hi_1"), col("ph_lo").as("lo_1"),

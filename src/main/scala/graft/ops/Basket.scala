@@ -88,7 +88,7 @@ object Basket {
   }
 
   /** [[coPurchasePairs]] plus the release handle for its checkpoint's
-    * pinned blocks (the Graph.cutWithHandle discipline) — for callers
+    * pinned blocks (the Pins.cutWithHandle discipline) — for callers
     * like [[alsoBought]] whose OWN output supersedes the pair table.
     */
   private[ops] def coPurchasePairsCut(
@@ -103,7 +103,7 @@ object Basket {
     // which both lets the domain cache release immediately and hands
     // multi-reference callers (alsoBought's two symmetrization
     // branches, pmiPairs' joins) a recompute-proof frame
-    val cut = Graph.cutWithHandle(
+    val cut = Pins.cutWithHandle(
       pairsOverDomain(li, minSupport, maxBasketSize))
     li.unpersist()
     cut
@@ -208,7 +208,7 @@ object Basket {
     // so the two symmetrization branches below read materialized
     // blocks — no second persist; the pair-scale checkpoint is
     // released once the ≤ k-per-item output (the strictly smaller
-    // frame) is its own cut (the Graph.cutWithHandle discipline)
+    // frame) is its own cut (the Pins.cutWithHandle discipline)
     val (pairs, releasePairs) =
       coPurchasePairsCut(items, basketCol, itemCol, minSupport,
         maxBasketSize)

@@ -30,7 +30,7 @@ object Funnel {
     * [[funnelCounts]] (which counts them) and latency analyses (which
     * join them: time-to-convert for a user = stage k's time minus
     * stage 1's). Each frame is persisted (read by the next stage and
-    * by the caller; caller/session owns clearCache).
+    * by the caller), and the caller unpersists it after its last read.
     */
   def stageTimes(
       events: DataFrame,
@@ -91,7 +91,9 @@ object Funnel {
     * — fixed value bands (the q_lm_buckets rule: a percentile would
     * need a global sort; bands are one hash aggregate and exact
     * integer arithmetic, so the histogram is layout/engine-exact).
-    * Emits `(band, n_users, min_us, max_us)` for occupied bands.
+    * Emits `(band, n_users, min_us, max_us)` for occupied bands, as a
+    * local checkpoint of the bands (band-cardinality, not user-
+    * cardinality) that is released along with the returned frame.
     */
   def conversionLatencyBands(
       events: DataFrame,
@@ -117,12 +119,9 @@ object Funnel {
       .groupBy(expr(s"__d div ${bandWidthUs}L").as("band"))
       .agg(count(lit(1)).as("n_users"),
         min(col("__d")).as("min_us"), max(col("__d")).as("max_us"))
-      .persist()
-    bands.count()
+      .transform(Pins.materializeOnce)
     times.head.unpersist()
     times.last.unpersist()
-    // the ONE frame the caller owns (band-cardinality, not user-
-    // cardinality): release via bands.unpersist()/clearCache when done
     bands
   }
 }

@@ -31,29 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Eager `localCheckpoint` plus a release handle for its pinned
-    * blocks. A local checkpoint truncates lineage, so its blocks stay
-    * in executor storage until the RDD is GC'd — one leaked frame per
-    * cut (history/ADVICE.md), and in the iterative loops here one
-    * leaked frame PER ROUND, which compounds across a long-lived
-    * session (r17, history/kcore_probe_10x.json: the per-round-cut
-    * peel degraded from 4.8 s to 15.4-15.8 s across three samples in
-    * one JVM as dead cuts piled up). The handle releases the blocks
-    * explicitly; calling it is safe exactly when nothing will read the
-    * frame again — a released local checkpoint cannot be recomputed
-    * by design, so the discipline is strictly
-    * release-after-supersession.
-    */
-  private[ops] def cutWithHandle(df: DataFrame): (DataFrame, () => Unit) = {
-    val cp = df.localCheckpoint()
-    val release: () => Unit = cp.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        () => { lr.rdd.unpersist(false); () }
-      case _ => () => ()
-    }
-    (cp, release)
-  }
-
   /** Integer-exact PageRank (the scheme in the object doc).
     *
     * Two paths, one result. The edge list is cut once; ONE
@@ -101,7 +78,7 @@ object Graph {
     // or the caller's whole edge-DERIVATION subtree (a join+distinct
     // for the trade graph) executes per job (r16; the triangleCounts
     // discipline); the driver-path probe reads the same cut
-    val (e, releaseE) = cutWithHandle(
+    val (e, releaseE) = Pins.cutWithHandle(
       edges.select(srcCol.cast("long").as("src"),
         dstCol.cast("long").as("dst")))
     val spark = e.sparkSession
@@ -150,7 +127,7 @@ object Graph {
       // per step; a short span chains lazily and pays one cut per
       // checkEvery iterations
       if (it % checkEvery == 0 && it < iters) {
-        val (cp, rel) = cutWithHandle(ranks)
+        val (cp, rel) = Pins.cutWithHandle(ranks)
         ranks = cp
         // the new cut is materialized (eager), so the previous one is
         // unreachable — release its pinned blocks
@@ -160,7 +137,7 @@ object Graph {
     }
     // the returned frame must not depend on caches we are about to
     // release — cut it eagerly, then drop the loop-scoped state
-    val out = if (iters == 0) ranks else cutWithHandle(ranks)._1
+    val out = if (iters == 0) ranks else Pins.cutWithHandle(ranks)._1
     // `out` is self-contained now: the loop-scoped cuts (edge list,
     // last intermediate rank cut) are dead — release them instead of
     // pinning one frame per call for the session lifetime
@@ -301,8 +278,8 @@ object Graph {
     // count() below must not re-run the upstream; the handle releases
     // each cut's pinned blocks once a newer cut supersedes it (the
     // per-round leak otherwise compounds across a session, see
-    // [[cutWithHandle]])
-    var (e, releaseE) = cutWithHandle(edges
+    // [[Pins.cutWithHandle]])
+    var (e, releaseE) = Pins.cutWithHandle(edges
       .select(least(srcCol, dstCol).as("u"), greatest(srcCol, dstCol).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct())
@@ -314,7 +291,7 @@ object Graph {
     var converged = n == 0L
     while (!converged && it < maxIter) {
       val keep = degrees(e).filter(col("d") >= k).select(col("x"))
-      val (e2, rel) = cutWithHandle(e
+      val (e2, rel) = Pins.cutWithHandle(e
         .join(keep.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
         .select(col("u"), col("v")))

@@ -223,19 +223,17 @@ object PosOps {
     }
     val withFp = clean.withColumn(fpCol,
       md5(to_json(struct(fpFields.toIndexedSeq: _*))))
-    // cached across the threshold count and the two joins: uncached,
-    // the decision count would run the full fingerprint aggregation a
-    // second time. On the broadcast path the cache holds ≤ maxDupKeys
-    // 16-byte hashes (what the broadcast holds anyway) and is evicted
-    // with the session; the fallback path unpersists immediately.
+    // materialized once across the threshold count and the two joins:
+    // otherwise the decision count would run the full fingerprint
+    // aggregation a second time. On the broadcast path it holds
+    // ≤ maxDupKeys 16-byte hashes (what the broadcast holds anyway)
     val dupFps = withFp.groupBy(col(fpCol))
       .agg(count(lit(1)).as("__graft_fp_n"))
       .filter(col("__graft_fp_n") > 1)
       .select(col(fpCol))
-      .persist()
+      .transform(Pins.materializeOnce)
     if (dupFps.count() > maxDupKeys) {
       // degenerate mostly-duplicate input: broadcast would not fit
-      dupFps.unpersist()
       withFp.dropDuplicates(fpCol).drop(fpCol)
     } else {
       val uniques = withFp

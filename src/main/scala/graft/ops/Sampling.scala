@@ -708,16 +708,15 @@ object Sampling {
     // rows would emit byte-identical duplicate draw rows — distinct
     // first (one exchange over two longs) so output arity is exactly
     // ≤ k per distinct positive, never silently inflated
-    // persisted: the draw pass AND the anti-join below both consume
-    // it, and without the pin the whole positives subtree (a fact
-    // join + distinct at the q_negative_samples call site) executes
-    // once per consumer (r17 profile: two identical 870 ms stages).
-    // The session/bench owns clearCache — the Dedup signature-table
-    // contract.
+    // materialized once: the draw pass AND the anti-join below both
+    // consume it, and without the pin the whole positives subtree (a
+    // fact join + distinct at the q_negative_samples call site)
+    // executes once per consumer (r17 profile: two identical 870 ms
+    // stages).
     val posDistinct = positives
       .select(userCol.cast("long").as("u"), itemCol.cast("long").as("p"))
       .distinct()
-      .persist()
+      .transform(Pins.materializeOnce)
     val drawn = posDistinct
       .as[(Long, Long)]
       .mapPartitions { it =>

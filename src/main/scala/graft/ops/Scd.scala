@@ -86,13 +86,12 @@ object Scd {
     val unchanged = attrs
       .map(a => col(s"u.`$a`") <=> col(s"o.`$a`"))
       .reduceOption(_ && _).getOrElse(lit(true))
-    // cached: the inserts projection and the superseded key set both
-    // read this join (caller/session owns clearCache — the
-    // tfidf/bm25/stripBoilerplate contract)
+    // materialized once: the inserts projection and the superseded
+    // key set both read this join
     val changedOrNew = u
       .join(o, col(s"u.`$key`") === col(s"o.`$key`"), "left")
       .filter(col(s"o.`$key`").isNull || !unchanged)
-      .cache()
+      .transform(Pins.materializeOnce)
 
     val outCols = history.columns.toSeq
     val inserts = changedOrNew.select(outCols.map {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Pins
+
 /** IVF (inverted-file) approximate nearest neighbor — the FAISS
   * IVF-Flat shape, Spark-first: a coarse spherical k-means quantizer
   * splits the corpus into `nlist` cells; each query probes its
@@ -228,7 +230,7 @@ object Ivf {
       .withColumn("nrm", Knn.norm(col("v")))
       // no-direction rows: see Knn.bruteForceKnn (NaN poisons ranking)
       .filter(col("nrm") > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Pins.materializeOnce)
     // bare (cell, id) rows — vectors never ride the candidate join
     val assigned = e.select(col("vec_id"),
       probeCellsExploded(col("v"), centroids, nprobe).as("cell"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Pins
+
 /** Approximate/exact nearest-neighbor search over an embedding column.
   *
   * Scale design (corpus ≫ memory, 1000 executors):
@@ -212,15 +214,14 @@ object Knn {
       .select(col("query_id"), (col("psig") + col("tag")).as("bucket")))
     // candidate generation over bare (id, bucket) rows — the corpus's
     // vectors never ride through the explode/join (512B/row vs 16B).
-    // Persisted: both the bucket pass and the vector-attach join read
-    // it, or the corpus would be scanned (and norms recomputed) twice.
-    // Cache released on Catalyst's accounting with the result / via
-    // clearCache, as with the Dedup pipelines.
+    // Materialized once: both the bucket pass and the vector-attach
+    // join read it, or the corpus would be scanned (and norms
+    // recomputed) twice.
     val cBase = corpus.select(
       col("vec_id"), col("vector").cast("array<double>").as("cv"))
       .withColumn("cn", norm(col("cv")))
       .filter(col("cn") > 0) // no-direction rows: see bruteForceKnn
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Pins.materializeOnce)
     val cIds = cBase
       .select(col("vec_id"), posexplode(sigArr(col("cv"))).as(Seq("tbl", "sig")))
       .select(col("vec_id"), (col("sig") + tag).as("bucket"))

@@ -128,6 +128,15 @@ object CorpusIngest {
       .start()
   }
 
+  /** The sink partition of one epoch: `runId.epoch`, or the bare
+    * epoch without a runId. runId namespaces the epoch so partition
+    * identity is (incarnation, epoch): replay WITHIN an incarnation
+    * still rewrites its own partition (idempotence), while a later
+    * incarnation's epoch 0 can never clobber an earlier one's.
+    */
+  private[streaming] def epochPartition(runId: String, epoch: Long): String =
+    if (runId.isEmpty) epoch.toString else s"$runId.$epoch"
+
   /** One micro-batch: historical-corpus gate (if configured),
     * LM-score gate (if configured), decontaminate, then persist
     * survivors into the epoch's own partition (idempotent under
@@ -204,11 +213,7 @@ object CorpusIngest {
       .decontaminate(matched, bench, "doc_id", "text", shingleLen)
       .select(col("doc_id"))
     val clean = matched.join(leaked, Seq("doc_id"), "left_anti")
-    // runId namespaces the epoch so partition identity is
-    // (incarnation, epoch): replay WITHIN an incarnation still
-    // rewrites its own partition (idempotence), while a later
-    // incarnation's epoch 0 can never clobber an earlier one's
-    val part = if (runId.isEmpty) epoch.toString else s"$runId.$epoch"
+    val part = epochPartition(runId, epoch)
     val out = clean.select(
       col("doc_id"), col("text"), col("fp"),
       lit(part).as("ingest_batch"))

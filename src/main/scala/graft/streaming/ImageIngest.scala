@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.multimodal.{Multimodal, Phash}
+import graft.ops.Pins
 
 /** Image-modality streaming ingest gate — the pHash twin of the text
   * pipeline's first-seen exact dedup ([[CorpusIngest]] step 2): an
@@ -119,10 +120,10 @@ object ImageIngest {
         s"got $maxHamming")
     // the batch is re-read by three consumers (seen probe, pair join,
     // cluster labeling) — materialize once, micro-batch-bounded;
-    // Phash.materializeOnce skips the copy when the caller already
+    // Pins.materializeOnce skips the copy when the caller already
     // checkpointed the frame (the two-epoch gate queries and
     // applyBatch both do), instead of stacking eager copies per call
-    val h = Phash.materializeOnce(
+    val h = Pins.materializeOnce(
       hashes.select(col("asset_id").cast("long").as("asset_id"),
         col("ph_hi").cast("long").as("ph_hi"),
         col("ph_lo").cast("long").as("ph_lo")))
@@ -181,7 +182,7 @@ object ImageIngest {
       epoch: Long,
       runId: String = "",
       maxHamming: Int = 3): Unit = {
-    val part = if (runId.isEmpty) epoch.toString else s"$runId.$epoch"
+    val part = CorpusIngest.epochPartition(runId, epoch)
     val index = store.read(spark, indexTable, indexSchema)
       .filter(col("ingest_batch") =!= part)
       .select(col("b"), col("v"), col("ph_hi"), col("ph_lo"))
@@ -190,14 +191,21 @@ object ImageIngest {
     // recording consistent with what was gated under source retries)
     val h = hashes.localCheckpoint()
     val kept = gateBatch(spark, h, index, maxHamming)
-    store.overwritePartitions(indexTable,
-      Phash.bandRows(h).select(col("asset_id"), col("ph_hi"),
-        col("ph_lo"), col("b"), col("v"), lit(part).as("ingest_batch")),
-      "ingest_batch", Seq(part))
+    recordBands(store, indexTable, h, part)
     store.overwritePartitions(imagesTable,
       kept.withColumn("ingest_batch", lit(part)),
       "ingest_batch", Seq(part))
   }
+
+  /** Record every band row of `hashes` `(asset_id, ph_hi, ph_lo)`
+    * into partition `part` of band-index `table` ([[indexSchema]]).
+    */
+  private[streaming] def recordBands(store: TableStore, table: String,
+      hashes: DataFrame, part: String): Unit =
+    store.overwritePartitions(table,
+      Phash.bandRows(hashes).select(col("asset_id"), col("ph_hi"),
+        col("ph_lo"), col("b"), col("v"), lit(part).as("ingest_batch")),
+      "ingest_batch", Seq(part))
 
   /** Start the image ingest stream over raw image assets
     * `(asset_id, mime, payload)`: per micro-batch, REAL decode →

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.multimodal.{AudioPrint, Multimodal, Phash, VideoPhash}
+import graft.ops.Pins
 import graft.text.TextOps
 
 /** STREAMING multimodal manifest — the one-pass ingest composition of
@@ -113,7 +114,7 @@ object MultimodalIngest {
     // the batch feeds the fingerprint gate AND the id spine —
     // materialize once (micro-batch-bounded), skipped if the caller
     // already did
-    val fp = Phash.materializeOnce(
+    val fp = Pins.materializeOnce(
       docs.select(col("doc_id").cast("long").as("doc_id"),
         TextOps.fingerprint(col("text")).as("fp")))
     val textKeep = fp.groupBy(col("fp"))
@@ -163,7 +164,7 @@ object MultimodalIngest {
       epoch: Long,
       runId: String = "",
       maxHamming: Int = 3): Unit = {
-    val part = if (runId.isEmpty) epoch.toString else s"$runId.$epoch"
+    val part = CorpusIngest.epochPartition(runId, epoch)
     def index(table: String): DataFrame =
       store.read(spark, table, ImageIngest.indexSchema)
         .filter(col("ingest_batch") =!= part)
@@ -173,9 +174,9 @@ object MultimodalIngest {
       .select(col("fp"))
     // each input feeds the gate AND its state recording — pin once
     val d = docs.localCheckpoint()
-    val ih = Phash.materializeOnce(imageHashes)
-    val ah = Phash.materializeOnce(audioHashes)
-    val vh = Phash.materializeOnce(videoHashes)
+    val ih = Pins.materializeOnce(imageHashes)
+    val ah = Pins.materializeOnce(audioHashes)
+    val vh = Pins.materializeOnce(videoHashes)
     val manifest = manifestBatch(spark, d, ih, ah, vh,
       textSeen, index(imageIndexTable), index(audioIndexTable),
       index(videoIndexTable), maxHamming)
@@ -191,17 +192,9 @@ object MultimodalIngest {
           col("doc_id").cast("long").as("doc_id")).distinct()
         .withColumn("ingest_batch", lit(part)),
       "ingest_batch", Seq(part))
-    def record(table: String, hashes: DataFrame): Unit = {
-      store.overwritePartitions(table,
-        Phash.bandRows(hashes).select(col("asset_id"), col("ph_hi"),
-          col("ph_lo"), col("b"), col("v"),
-          lit(part).as("ingest_batch")),
-        "ingest_batch", Seq(part))
-      ()
-    }
-    record(imageIndexTable, ih)
-    record(audioIndexTable, ah)
-    record(videoIndexTable, vh)
+    ImageIngest.recordBands(store, imageIndexTable, ih, part)
+    ImageIngest.recordBands(store, audioIndexTable, ah, part)
+    ImageIngest.recordBands(store, videoIndexTable, vh, part)
   }
 
   /** Start the composed ingest stream over raw multimodal rows
@@ -302,7 +295,7 @@ object MultimodalIngest {
     def keeps(index: DataFrame, flag: String): DataFrame = {
       // one hash row per seen asset (the index carries 4 band rows);
       // pinned once — the pair join and the presence spine both read it
-      val seen = Phash.materializeOnce(index
+      val seen = Pins.materializeOnce(index
         .select(col("asset_id"), col("ph_hi"), col("ph_lo")).distinct())
       val dropped = graft.dedup.Dedup.nearDupClusters(
           Phash.neardupPairs(seen, "asset_id", maxHamming)

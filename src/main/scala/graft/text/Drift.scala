@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Pins
+
 /** Corpus distribution drift — "did this crawl snapshot change under
   * me": Jensen–Shannon divergence between two corpora's hashed-n-gram
   * unigram distributions, per bucket and in total. The monitoring
@@ -78,16 +80,16 @@ object Drift {
     // corpus still has smoothed mass (and a zero js_term) — the report
     // cardinality is the model constant, not data-dependent
     val all = (0 until buckets).toDF("bucket")
-    // persisted: the totals probe below AND the returned report both
-    // materialize this frame — without the cache each one re-runs the
+    // materialized once: the totals probe below AND the returned
+    // report both read this frame — otherwise each one re-runs the
     // whole corpus tokenize+count pass (measured ~2× the operator).
-    // The cache is `buckets` rows; caller/session owns clearCache.
+    // It is `buckets` rows.
     val joined = all
       .join(counts, Seq("bucket"), "left")
       .select(col("bucket"),
         coalesce(col("c_a"), lit(0L)).as("c_a"),
         coalesce(col("c_b"), lit(0L)).as("c_b"))
-      .persist()
+      .transform(Pins.materializeOnce)
     // totals are bounded aggregates of the bucket frames — collected
     // once so the probabilities are plan literals (no crossJoin that
     // would re-run the count pass per evaluation; the Dsir.fit rule)
@@ -167,9 +169,9 @@ object Drift {
     // densified over the FULL grid: an empty band still carries
     // smoothed mass, and its term is nonzero whenever the two totals
     // differ — dropping empty bands would silently understate PSI
-    // persisted (the driftCore rule): the totals probe and the
-    // returned report both read it — uncached, each re-runs the
-    // banding scan. `nBands + 3` rows; caller/session owns clearCache.
+    // materialized once (the driftCore rule): the totals probe and
+    // the returned report both read it — otherwise each re-runs the
+    // banding scan. `nBands + 3` rows.
     val counts = (-1 to (nBands + 1)).toDF("band")
       .join(tagged
         .select(bandOf(col("__v")).as("band"), col("__a"))
@@ -180,7 +182,7 @@ object Drift {
       .select(col("band"),
         coalesce(col("c_a"), lit(0L)).as("c_a"),
         coalesce(col("c_b"), lit(0L)).as("c_b"))
-      .persist()
+      .transform(Pins.materializeOnce)
     val totals = counts.agg(sum(col("c_a")), sum(col("c_b"))).head()
     val na = (if (totals.isNullAt(0)) 0L else totals.getLong(0)).toDouble
     val nb = (if (totals.isNullAt(1)) 0L else totals.getLong(1)).toDouble

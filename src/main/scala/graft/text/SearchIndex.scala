@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ops.Pins
 import graft.streaming.TableStore
 
 /** Persisted inverted index through the [[TableStore]] — the
@@ -216,9 +217,10 @@ object SearchIndex {
     val nBuckets = meta("n_buckets").toInt
     val nDocs = meta("n_docs").toLong
     val totalDl = meta("total_dl").toLong
-    // persisted: the bucket probe, the vocabulary semi-join, and the
-    // scoring fan-out all read it (caller/session owns clearCache)
-    val qterms = TextOps.queryTerms(queries, qidCol, qtextCol).persist()
+    // materialized once: the bucket probe, the vocabulary semi-join,
+    // and the scoring fan-out all read it
+    val qterms = Pins.materializeOnce(
+      TextOps.queryTerms(queries, qidCol, qtextCol))
     val buckets = qterms
       .select(bucketOf(col("term"), nBuckets).as("b")).distinct()
       .collect().map(_.getString(0)).toSeq
@@ -273,8 +275,8 @@ object SearchIndex {
     * lattice / exact-decimal discipline and the persisted-index path
     * replays against the SAME DuckDB oracle (the q_bm25_search_indexed
     * precedent applied to the two-pass operator). The returned frame
-    * holds one pin, the expansion-vocabulary checkpoint (caller or
-    * session owns it).
+    * holds one pin, the expansion-vocabulary checkpoint, released along
+    * with the frame.
     */
   def rm3Search(
       spark: SparkSession,

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Pins
+
 /** Text-analysis operators for large-scale training-data pipelines.
   *
   * Per-document features are Column expressions built from
@@ -133,12 +135,12 @@ object TextOps {
     * pipelines. ONE tokenize+explode pass over the corpus text: the
     * (doc,term) frequency table is unique per pair, so document
     * frequency is just `tf.groupBy(term).count` — no second explode.
-    * The tf intermediate is persisted because two plan branches read
-    * it (caller or session owns `clearCache`, same contract as
-    * [[graft.dedup.Dedup]]); the corpus size broadcasts as a scalar.
+    * The tf intermediate is materialized once because two plan
+    * branches read it ([[graft.ops.Pins.materializeOnce]]); the corpus
+    * size broadcasts as a scalar.
     */
   def tfidf(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tf = termFreqs(docs, col(idCol), col(textCol)).persist()
+    val tf = Pins.materializeOnce(termFreqs(docs, col(idCol), col(textCol)))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val total = docs.agg(count(lit(1)).as("n_docs"))
     tf.join(df, Seq("term"))
@@ -164,12 +166,12 @@ object TextOps {
 
   /** BM25 per (document, term) ([[bm25Weight]], default k1 = 1.2,
     * b = 0.75). One tokenize pass like [[tfidf]] (dl and df derive
-    * from the persisted tf table — same caller-owns-clearCache
-    * contract) plus a broadcast of the two corpus scalars (N, avgdl).
+    * from the materialized tf table) plus a broadcast of the two
+    * corpus scalars (N, avgdl).
     */
   def bm25(docs: DataFrame, idCol: String, textCol: String,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val tf = termFreqs(docs, col(idCol), col(textCol)).persist()
+    val tf = Pins.materializeOnce(termFreqs(docs, col(idCol), col(textCol)))
     val (dl, totals) = corpusStats(docs, idCol, tf)
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     tf.join(dl, Seq("doc_id"))
@@ -278,8 +280,8 @@ object TextOps {
     * postings or the feedback-bounded intermediates; the corpus tf is
     * cached through pass 1 and the RM1 estimate and released at the
     * expansion checkpoint, so pass 2 re-derives it from the corpus. The
-    * returned frame holds one pin, the expansion-vocabulary checkpoint
-    * (caller or session owns it).
+    * returned frame holds one pin, the expansion-vocabulary checkpoint,
+    * released along with the frame.
     *
     * `beta` must carry a SHORT exact decimal expansion (0.5, 0.25,
     * 0.75…): its exact binary value becomes a decimal literal in the
@@ -762,10 +764,9 @@ object TextOps {
       .select(col(idCol), col("chunk_idx"), col("chunk_text"),
         xxhash64(col("chunk_text")).as("seg_hash"))
       // two plan branches read the segments (the frequency pass and
-      // the anti-join probe side) — without the persist the chunk
-      // explode over the corpus text runs twice (caller/session owns
-      // clearCache, the tfidf/bm25 contract)
-      .persist()
+      // the anti-join probe side) — materialized once, or the chunk
+      // explode over the corpus text runs twice
+      .transform(Pins.materializeOnce)
     val boiler = segs
       .groupBy(col("seg_hash"))
       .agg(countDistinct(col(idCol)).as("n_docs"))

@@ -44,7 +44,6 @@ object PlanSnap {
   def snapshot(spark: SparkSession, dir: String, q: String): String = {
     val txt = SparkEntry.queries(q)(spark, dir)
       .queryExecution.explainString(FormattedMode)
-    spark.catalog.clearCache()
     Bench.dropDeadPins(spark)
     normalize(txt)
   }

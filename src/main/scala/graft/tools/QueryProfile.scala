@@ -67,7 +67,6 @@ object QueryProfile {
     names.foreach { n =>
       SparkEntry.queries(n)(spark, dir)
         .write.mode("overwrite").format("noop").save()
-      spark.catalog.clearCache()
     }
     graft.Bench.dropDeadPins(spark)
     val listener = new StageListener
@@ -80,11 +79,9 @@ object QueryProfile {
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"== $n%s  wall=${dt}%.2fs")
       listener.drainAndReport(spark)
-      spark.catalog.clearCache()
       System.gc()
-      // dead localCheckpoint pins survive clearCache (RDD-level, not
-      // SQL-cache) — drop them so one query's pins don't distort the
-      // next profile (the Bench between-samples discipline)
+      // drop the query's dead localCheckpoint pins so they don't
+      // distort the next profile (the Bench between-samples discipline)
       graft.Bench.dropDeadPins(spark)
     }
     spark.stop()

@@ -233,13 +233,19 @@ class SearchIndexSpec extends SparkTestBase {
       col("etype"), stages).collect()
     assert(spark.sparkContext.getPersistentRDDs.size == before,
       "funnelCounts leaked cached stage frames")
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
     val bands = graft.ops.Funnel.conversionLatencyBands(events,
       col("user_id"), col("ts"), col("etype"), stages, 60L * 1000000L)
     bands.collect()
-    // the ONE documented caller-owned frame is the band result itself
+    // the ONE pin left is the band result's own checkpoint
     assert(spark.sparkContext.getPersistentRDDs.size == before + 1,
       "conversionLatencyBands leaked stage frames beyond the band result")
-    bands.unpersist()
-    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- pinned
+    val read = bands.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+    assert(added == read,
+      s"conversionLatencyBands left pins $added; its output reads $read")
+    added.foreach(spark.sparkContext.getPersistentRDDs(_).unpersist())
   }
 }

@@ -3,18 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session per suite; UTC + small shuffle partitions
-  * to mirror the driver's Verify/Bench configuration.
+/** One shared local session per suite, built from the engine's own
+  * configuration ([[GraftSession.builder]]) on `local[4]`.
   */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // the deployment registration path — specs call the functions via
-    // spark.sql without a register() step
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+  lazy val spark: SparkSession = GraftSession.builder("local[4]", 4)
     .getOrCreate()
 
   def sfDir: String = "/root/testdata/sf0.001"
