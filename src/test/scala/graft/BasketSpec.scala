@@ -125,7 +125,7 @@ class BasketSpec extends SparkTestBase {
   test("alsoBought releases the pair-scale checkpoint (r17 cut discipline)") {
     // the pair table from coPurchasePairsCut is superseded by the
     // ≤ k-per-item output cut; only that output may stay pinned at
-    // RDD level after the call (the Graph.cutWithHandle discipline —
+    // RDD level after the call (the Pins.cutWithHandle discipline —
     // a leaked pair-scale frame per call is what degraded the 10×
     // bench samples [15.1, 93.5, 251.2] s)
     val before = spark.sparkContext.getPersistentRDDs.keySet
